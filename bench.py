@@ -359,7 +359,7 @@ def main() -> None:
         "io_probe_s": _io_probe(),
         # The dedicated 'io-mutation' tag, NOT the broad 'txnlog' tag:
         # that one also marks CPU-dominated consumers of txnlog
-        # fixtures (knn_ivf_refresh's IVF assignment, the CDF pair's
+        # fixtures (_knn_ivf_refresh's IVF assignment, the CDF pair's
         # rollups) — classifying those io_bound would let a genuine
         # CPU deopt print IO-DRIFT on a slower-storage environment and
         # ship unflagged (r12 review).  The tag lives on each entry's

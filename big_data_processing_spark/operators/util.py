@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import threading
 import time
 from contextlib import contextmanager
 
@@ -233,6 +234,8 @@ def release_barriers() -> int:
 # Pure wall-clock bookkeeping — never touches a DataFrame plan.
 
 _PHASES: dict[str, dict[str, float]] = {}
+# timed_phase runs on the prebuild pool's threads too
+_PHASES_LOCK = threading.Lock()
 
 
 @contextmanager
@@ -242,8 +245,10 @@ def timed_phase(entry: str, phase: str = "setup"):
     try:
         yield
     finally:
-        d = _PHASES.setdefault(entry, {})
-        d[phase] = d.get(phase, 0.0) + (time.perf_counter() - t0)
+        dt = time.perf_counter() - t0
+        with _PHASES_LOCK:
+            d = _PHASES.setdefault(entry, {})
+            d[phase] = d.get(phase, 0.0) + dt
 
 
 def drain_phases() -> dict[str, dict[str, float]]:
@@ -254,10 +259,11 @@ def drain_phases() -> dict[str, dict[str, float]]:
     a consumer that attributes timings to its own run must drain once
     BEFORE timing starts (discarding stale entries) and once after —
     bench.py does both; driver_sim drains before its replay loop."""
-    out = {
-        e: {p: round(s, 3) for p, s in d.items()} for e, d in _PHASES.items()
-    }
-    _PHASES.clear()
+    with _PHASES_LOCK:
+        out = {
+            e: {p: round(s, 3) for p, s in d.items()} for e, d in _PHASES.items()
+        }
+        _PHASES.clear()
     return out
 
 

@@ -878,49 +878,6 @@ def nation_acctbal_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# DuckDB twin of events_hourly_tumbling, kept for the local pytest
-# oracle check (tests/test_catalog_oracle.py) after the catalog entry
-# was retired in r5: a tumbling window IS a hopping window with
-# slide == size, so the hash-checked `events_hopping_window` entry
-# carries the driver evidence for the windowing machinery.
-EVENTS_HOURLY_TUMBLING_ORACLE = f"""
-    SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-           event_type,
-           COUNT(*) AS n_events,
-           {dsum_sql('value', 9)} AS total_value,
-           {davg_sql('value', 9)} AS avg_value
-    FROM events
-    GROUP BY 1, 2
-    ORDER BY window_start, event_type
-    """
-
-
-def events_hourly_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window aggregate in batch form (reference A12 / §2.9:
-    the maintained mv_monthly_summary aggregate; in streaming mode this
-    exact plan runs under readStream + watermark — see streaming/).
-    NOT a catalog entry since r5 (slot freed): tumbling is the
-    slide==size special case of the hash-checked hopping entry; this
-    formulation keeps its local oracle parity test."""
-    ev = _t(spark, sf_dir, "events")
-    # window_start serialized as a string: timestamp-typed outputs hash
-    # differently across engines' pandas dtypes (ns vs us)
-    return (
-        ev.groupBy(
-            F.date_format(F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum("value", 9).alias("total_value"),
-            davg("value", 9).alias("avg_value"),
-        )
-        .orderBy("window_start", "event_type")
-    )
-
-
 @query(
     "events_sessionize",
     oracle=f"""
@@ -955,8 +912,8 @@ def events_hourly_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity gap), BOTH ways,
     key-joined — merged r13 with the retired ``events_session_window``
-    twin (window headroom; the retiree keeps its pytest oracle in
-    tests/test_catalog_oracle.py):
+    entry (window headroom), whose fn survives as the private
+    ``_events_session_window`` arm helper:
 
     - the lag→flag→running-sum idiom (this entry's original arm):
       (user_id, session_seq) → n_events, session_value; deterministic
@@ -1018,10 +975,10 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", 9).alias("session_value"))
     )
     # runtime import: catalog_more imports this module for @query
-    from .catalog_more import events_session_window
+    from .catalog_more import _events_session_window
 
     wn = Window.partitionBy("user_id").orderBy("session_start")
-    native_arm = events_session_window(spark, sf_dir, source=ev).select(
+    native_arm = _events_session_window(spark, sf_dir, source=ev).select(
         "user_id",
         F.row_number().over(wn).cast("int").alias("session_seq"),
         "session_start",

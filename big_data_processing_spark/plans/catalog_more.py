@@ -142,8 +142,7 @@ _GSET_FAMILY_SELECT = """
 def rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP hierarchy (month ⊂ year ⊂ grand total) AND the
     status×priority CUBE served from ONE fact scan via GROUPING SETS
-    (merged r8; the retired `cube_status_priority` twin keeps its
-    DuckDB-oracle parity check in tests/test_catalog_oracle.py).  The
+    (merged r8 with the retired `cube_status_priority` entry).  The
     `family` arm column partitions the output back into the two
     original result sets; the grand total appears once as
     family='all'.
@@ -157,107 +156,6 @@ def rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         _GSET_FAMILY_SELECT.format(
             revenue=dsum_sql_spark("o_totalprice", 2), table="orders_rollup_v"
         )
-    )
-
-
-# Retired from the catalog in r8 (merged into rollup_revenue's
-# GROUPING SETS pass — one scan + one Expand instead of two scans and
-# two shuffles).  The single-family formulation keeps its DuckDB
-# oracle check in tests/test_catalog_oracle.py.
-CUBE_STATUS_PRIORITY_ORACLE = f"""
-    SELECT COALESCE(o_orderstatus, '<all>') AS orderstatus,
-           COALESCE(o_orderpriority, '<all>') AS orderpriority,
-           CAST(GROUPING(o_orderstatus) * 2 + GROUPING(o_orderpriority) AS INT)
-               AS grouping_level,
-           COUNT(*) AS n_orders,
-           {dsum_sql('o_totalprice', 2)} AS revenue
-    FROM orders
-    GROUP BY CUBE (o_orderstatus, o_orderpriority)
-    ORDER BY grouping_level, orderstatus, orderpriority
-    """
-
-
-def cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE over two dimensions (all four grouping-set combinations) —
-    retired catalog entry (r8), subsumed by rollup_revenue's 'cube'
-    and 'all' family arms; oracle parity lives in pytest."""
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.cube("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            dsum("o_totalprice", 2).alias("revenue"),
-            (F.grouping("o_orderstatus") * 2 + F.grouping("o_orderpriority"))
-            .cast("int")
-            .alias("grouping_level"),
-        )
-        .select(
-            F.coalesce("o_orderstatus", F.lit("<all>")).alias("orderstatus"),
-            F.coalesce("o_orderpriority", F.lit("<all>")).alias("orderpriority"),
-            "grouping_level",
-            "n_orders",
-            "revenue",
-        )
-        .orderBy("grouping_level", "orderstatus", "orderpriority")
-    )
-
-
-_NORM_EXPR = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-
-
-DEDUP_PREFIX_LEVENSHTEIN_ORACLE = f"""
-    WITH normed AS (
-        SELECT doc_id, {_NORM_EXPR} AS norm FROM documents
-    ),
-    pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               substr(a.norm, 41, 60) AS tail_a, substr(b.norm, 41, 60) AS tail_b
-        FROM normed a
-        JOIN normed b
-          ON substr(a.norm, 1, 40) = substr(b.norm, 1, 40) AND a.doc_id < b.doc_id
-    )
-    SELECT id_a, id_b,
-           CAST(levenshtein(tail_a, tail_b) AS INT) AS edit_distance,
-           CAST(GREATEST(length(tail_a), length(tail_b)) AS INT) AS max_len
-    FROM pairs
-    ORDER BY id_a, id_b
-    """
-
-
-def dedup_prefix_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edit-distance verification of prefix-blocked candidate pairs:
-    docs sharing a 40-char normalized prefix are compared by
-    levenshtein on the following 60 chars — the character-level
-    near-dup check beside shingle Jaccard (blocking keeps the
-    quadratic levenshtein off all-pairs).
-
-    Retired catalog entry (r11): both twins verify the SAME blocked
-    pair set, so dedup_ngram_jaccard now carries edit_distance/max_len
-    in its single self-join pass; oracle parity + reconstruction
-    evidence lives in tests/test_catalog_oracle.py."""
-    from ..functions.text import normalize_text
-
-    d = _t(spark, sf_dir, "documents")
-    normed = d.select(F.col("doc_id"), normalize_text("text").alias("norm"))
-    a = normed.select(
-        F.col("doc_id").alias("id_a"),
-        F.substring("norm", 1, 40).alias("pfx_a"),
-        F.substring("norm", 41, 60).alias("tail_a"),
-    )
-    b = normed.select(
-        F.col("doc_id").alias("id_b"),
-        F.substring("norm", 1, 40).alias("pfx_b"),
-        F.substring("norm", 41, 60).alias("tail_b"),
-    )
-    return (
-        a.join(b, (F.col("pfx_a") == F.col("pfx_b")) & (F.col("id_a") < F.col("id_b")))
-        .select(
-            "id_a",
-            "id_b",
-            F.levenshtein("tail_a", "tail_b").cast("int").alias("edit_distance"),
-            F.greatest(F.length("tail_a"), F.length("tail_b")).cast("int").alias("max_len"),
-        )
-        .orderBy("id_a", "id_b")
     )
 
 
@@ -448,36 +346,7 @@ def ranking_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("mktsegment", "rnk", "custkey")
 
 
-# Retired from the catalog in r13: events_sessionize carries this
-# computation as its native arm (key-joined on (user_id, session_seq),
-# a cross-implementation certificate).  The oracle stays here for the
-# retiree's pytest check in tests/test_catalog_oracle.py.
-EVENTS_SESSION_WINDOW_ORACLE = """
-    WITH flagged AS (
-        SELECT user_id, ts, value,
-               CASE WHEN epoch_us(ts) - LAG(epoch_us(ts)) OVER w > 1800000000
-                    OR LAG(epoch_us(ts)) OVER w IS NULL THEN 1 ELSE 0 END AS new_s
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-    ),
-    sess AS (
-        SELECT user_id, ts, value,
-               SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts ASC
-                                ROWS UNBOUNDED PRECEDING) AS sid
-        FROM flagged
-    )
-    SELECT user_id,
-           strftime(MIN(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_start,
-           strftime(MAX(ts) + INTERVAL 30 MINUTE, '%Y-%m-%d %H:%M:%S.%f') AS session_end,
-           COUNT(*) AS n_events,
-           CAST(CAST(SUM(CAST(value AS DECIMAL(27,9))) AS VARCHAR) AS DOUBLE) AS session_value
-    FROM sess
-    GROUP BY user_id, sid
-    ORDER BY user_id, session_start
-    """
-
-
-def events_session_window(
+def _events_session_window(
     spark: SparkSession, sf_dir: str, source: DataFrame | None = None
 ) -> DataFrame:
     """Spark's native session_window (gap-merged event-time sessions) in
@@ -488,8 +357,7 @@ def events_session_window(
 
     [Retired from the catalog in r13: ``events_sessionize`` joins this
     fn's output as its ``*_native`` columns — the driver hash now
-    certifies both implementations against one oracle.  This fn keeps
-    its standalone DuckDB parity check in tests/test_catalog_oracle.py.]
+    certifies both implementations against one oracle.]
 
     ``source`` (r13 optimization) lets the merged entry feed BOTH its
     arms from one materialized user_id-partitioned frame instead of
@@ -757,7 +625,7 @@ def events_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle by user_id + per-key sort — the window shape,
     not the naive inequality-join blowup."""
     asof_agg = events_asof_aggregate(spark, sf_dir)
-    range_agg = events_range_join_attribution(spark, sf_dir).withColumnRenamed(
+    range_agg = _events_range_join_attribution(spark, sf_dir).withColumnRenamed(
         "avg_value", "range_avg_value"
     )
     zero = F.lit(0).cast("long")
@@ -777,7 +645,7 @@ def events_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_range_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _events_range_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range (interval) join — purchases attributed to the same user's
     activity in the preceding 30 minutes — executed as the bucketized
     equi-join (operators/rangejoin.py): intervals explode to the <= 2
@@ -792,8 +660,7 @@ def events_range_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Retired as a standalone catalog entry in r9: its aggregates ride
     along as events_asof_last_purchase's n_pairs / n_purchases /
-    range_avg_value columns (hash-certified there); the standalone
-    formulation keeps its DuckDB-parity pytest via
+    range_avg_value columns, hash-certified there against the embedded
     EVENTS_RANGE_ATTR_ORACLE."""
     from ..operators.rangejoin import range_join
 
@@ -1143,10 +1010,9 @@ def full_outer_nation_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared by the exact-window and histogram-narrowing winsorization
-# entries: both must produce the identical 3-row contract, so a green
-# hash on BOTH proves the scale-safe cut-finder computes the same
-# type-1 P1/P99 as the reference ranking formulation.
+# The reference ranking formulation of winsorization: a green hash on
+# lineitem_winsorized_hist proves its scale-safe cut-finder computes
+# the same type-1 P1/P99 as this exact ranking window.
 _WINSOR_ORACLE = """
     WITH priced AS (
         SELECT l_returnflag AS flag,
@@ -1181,71 +1047,6 @@ _WINSOR_ORACLE = """
     GROUP BY p.flag
     ORDER BY p.flag
     """
-
-
-def lineitem_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winsorization (outlier clipping) — the numeric-feature curation
-    step that clamps a distribution's tails before training: per
-    returnflag, find the position-based P1/P99 of extendedprice (type-1
-    quantiles — deterministic cross-engine, never interpolated), clip
-    every value into [P1, P99], and report clip counts plus the
-    winsorized sum in exact integer cents.
-
-    NOT a catalog entry (slot freed in r5): with only 3 groups the
-    exact ranking window is a single-reducer sort per group, so
-    ``lineitem_winsorized_hist`` (the production histogram+narrowing
-    cut-finder, hash-checked against the SAME _WINSOR_ORACLE) carries
-    the driver evidence; this reference formulation remains as the
-    local parity twin (tests/test_catalog_oracle.py asserts both plans
-    produce identical rows)."""
-    li = _t(spark, sf_dir, "lineitem")
-    priced = li.select(
-        F.col("l_returnflag").alias("flag"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        "l_orderkey",
-        "l_linenumber",
-    )
-    w = Window.partitionBy("flag").orderBy(
-        F.asc("cents"), F.asc("l_orderkey"), F.asc("l_linenumber")
-    )
-    wc = Window.partitionBy("flag")
-    ranked = priced.select(
-        "flag",
-        "cents",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(wc).alias("n"),
-    )
-    cuts = ranked.groupBy("flag").agg(
-        F.max(
-            F.when(
-                F.col("rn") == F.ceil(0.01 * F.col("n")).cast("long"),
-                F.col("cents"),
-            )
-        ).alias("lo"),
-        F.max(
-            F.when(
-                F.col("rn") == F.ceil(0.99 * F.col("n")).cast("long"),
-                F.col("cents"),
-            )
-        ).alias("hi"),
-    )
-    return (
-        priced.join(F.broadcast(cuts), "flag")
-        .groupBy("flag")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.when(F.col("cents") < F.col("lo"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_clipped_low"),
-            F.sum(F.when(F.col("cents") > F.col("hi"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_clipped_high"),
-            F.sum(F.least(F.greatest(F.col("cents"), F.col("lo")), F.col("hi")))
-            .cast("long")
-            .alias("winsorized_cents"),
-        )
-        .orderBy("flag")
-    )
 
 
 def _winsor_priced(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1409,9 +1210,9 @@ def lineitem_winsorized_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winsorization with the PRODUCTION cut-finder: exact type-1
     P1/P99 located via fixed-width histogram + narrowing pass
     (histogram_quantile_cuts) instead of the per-group full-sort
-    ranking window — hash-checked against the SAME oracle as
-    lineitem_winsorized_stats, so a green row proves the scale path
-    selects bit-identical cut values.
+    ranking window — hash-checked against the exact ranking-window
+    oracle, so a green row proves the scale path selects bit-identical
+    cut values.
 
     Scale: two map-combinable scans (histogram, then only the located
     bins) + a window over per-bin DISTINCT values (bounded by bin value
@@ -1421,83 +1222,6 @@ def lineitem_winsorized_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     priced = _winsor_priced(spark, sf_dir)
     cuts = histogram_quantile_cuts(priced, {"lo": 0.01, "hi": 0.99})
     return _winsor_clip_report(priced, cuts)
-
-
-# Retired from the catalog in r10: txnlog_incremental_mv carries the
-# change-feed surface as per-type pivot columns (same bucket grain).
-# The standalone fn and its DuckDB oracle stay for the local parity +
-# reconstruction tests (tests/test_catalog_oracle.py).
-TXNLOG_CHANGE_FEED_ORACLE = """
-    WITH base AS (
-        SELECT o_custkey AS ck,
-               CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-                   AS tc
-        FROM orders GROUP BY 1
-    ),
-    changes AS (
-        SELECT 'delete' AS _change_type, ck, tc
-        FROM base WHERE ck % 61 = 0
-        UNION ALL
-        SELECT 'update_preimage', ck, tc
-        FROM base WHERE ck % 97 = 0 AND ck % 61 != 0
-        UNION ALL
-        SELECT 'update_postimage', ck, CAST(tc * 2 AS BIGINT)
-        FROM base WHERE ck % 97 = 0 AND ck % 61 != 0
-        UNION ALL
-        SELECT 'insert', ck + 1000000, CAST(tc + 7 AS BIGINT)
-        FROM base WHERE ck % 89 = 0
-    )
-    SELECT _change_type, CAST(ck % 10 AS BIGINT) AS bucket,
-           COUNT(*) AS n_rows, CAST(SUM(tc) AS BIGINT) AS sum_cents
-    FROM changes GROUP BY 1, 2 ORDER BY 1, 2
-    """
-
-
-def txnlog_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Change data feed from the txnlog manifests alone, hash-checked
-    end to end: version 0 (per-custkey rollup) takes a MERGE (doubling
-    ck%97==0 and inserting shifted ck%89==0 keys), a DELETE
-    (ck%61==0), and an OPTIMIZE compaction; txn_changes then derives
-    the row-level diff purely from (files removed) vs (files added)
-    between manifests — the immutable-file property means carried
-    files need never be scanned, so a CDF over a 100 TB table costs
-    O(changed files). The query RAISES unless (a) compaction actually
-    committed and (b) the diff between the delete version and the
-    optimize version is EMPTY — compaction moves every row to new
-    files, and value-equal moved rows must cancel rather than surface
-    as phantom updates. The endpoint feed (v0 -> latest) must classify every key
-    exactly: updated keys emit pre+post images at v0/final values,
-    deleted keys emit their v0 preimage even when also updated
-    in between, inserted keys emit their final values. Integer cents
-    throughout.
-
-    r8: the MERGE/DELETE/OPTIMIZE history builds ONCE per process
-    (txnfix shape ``txn_cdf_history``, version numbers pinned by the
-    build) and is shared read-only with txnlog_incremental_mv — the
-    feed derivation never writes, so no clone is needed."""
-    from ..sources.txnlog import txn_changes
-    from .txnfix import CDF_V_DELETE, CDF_V_OPTIMIZE, cdf_history_fixture
-
-    t = cdf_history_fixture(spark, sf_dir)
-    del_v, opt_v = CDF_V_DELETE, CDF_V_OPTIMIZE
-    n_phantom = txn_changes(spark, t, ["ck"], del_v, opt_v).count()
-    if n_phantom:
-        raise RuntimeError(
-            f"txnlog_change_feed: pure compaction surfaced {n_phantom} "
-            "phantom changes"
-        )
-    feed = txn_changes(spark, t, ["ck"], 0, opt_v)
-    return (
-        feed.groupBy(
-            "_change_type", (F.col("ck") % 10).cast("long").alias("bucket")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("tc").cast("long").alias("sum_cents"),
-        )
-        .orderBy("_change_type", "bucket")
-        .localCheckpoint()
-    )
 
 
 @query(
@@ -1596,9 +1320,7 @@ def txnlog_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     certifies BOTH the CDF classification and the delta-maintenance
     arithmetic, over ONE txn_changes read.  Both certificates stay: the
     compaction-diff-must-be-empty raise (pure OPTIMIZE surfacing
-    phantom changes) and the maintained-equals-recompute raise.  The
-    retired twin keeps its standalone fn + DuckDB parity + pivot
-    reconstruction tests in tests/test_catalog_oracle.py.
+    phantom changes) and the maintained-equals-recompute raise.
 
     r8: shares the ``txn_cdf_history`` fixture (built once per
     process); the version-0 aggregate is a time-travel read of the

@@ -32,6 +32,17 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
 
 
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` default: $SPARK_GRAFT_DRIVER_MEM if set,
+    else min(16g, half of physical RAM) — a fixed 16g heap on a smaller
+    host lets the JVM grow past what the machine can back."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(16 * 1024, ram_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "big_data_processing_spark",
     cpus: int | None = None,
@@ -50,7 +61,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         # the testdata events table stores TIMESTAMP(NANOS) parquet, which
         # Spark only reads via this legacy long passthrough

@@ -91,19 +91,32 @@ def parquet_row_count(sf_dir: str, name: str) -> int:
     bloom entry's per-run ``keys.count()`` job existed only to size
     m).  On a manifest-backed table format (Iceberg/Delta) the same
     number is one manifest lookup; on a raw parquet directory it is
-    the listing the scan planner performs anyway."""
+    the listing the scan planner performs anyway.
+
+    A directory whose part files carry no ``.parquet`` suffix (some
+    writers omit it) falls back to every file Spark's scan would read:
+    all files under it except hidden/metadata ones (a path component
+    starting with ``_`` or ``.``, e.g. ``_SUCCESS`` or ``.crc``)."""
     import glob as _glob
 
     import pyarrow.parquet as _pq
 
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    files = (
-        [path]
-        if os.path.isfile(path)
-        else sorted(
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = sorted(
             _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
         )
-    )
+        if not files:
+            for root, dirs, names in os.walk(path):
+                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+                files += [
+                    os.path.join(root, f)
+                    for f in names
+                    if not f.startswith(("_", "."))
+                ]
+            files.sort()
     if not files:
         raise FileNotFoundError(f"no parquet files under {path}")
     return sum(_pq.ParquetFile(f).metadata.num_rows for f in files)

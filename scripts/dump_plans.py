@@ -1,12 +1,23 @@
-"""Regenerate PLANS.md: formatted physical plans for flagship queries,
-annotated with the scale properties each demonstrates."""
+"""Dump catalog plans.
+
+python scripts/dump_plans.py
+    Regenerate PLANS.md: executed physical plans of flagship queries,
+    annotated with the scale properties each demonstrates.
+python scripts/dump_plans.py <round> <suffix> name1,name2,...
+    Write `.explain("formatted")` of each named entry to
+    plans/<round>/<name>_<suffix>.txt — an optimization round's plan
+    evidence (e.g. `r14 before`, then `r14 after`; plan claims in
+    OPTIMIZATION_<round>.md are checked against these).
+
+The scale dir comes from $SPARK_GRAFT_SF_DIR (default sf0.01)."""
 
 from __future__ import annotations
 
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 from big_data_processing_spark.plans import CATALOG  # noqa: E402
 from big_data_processing_spark.session import get_spark  # noqa: E402
@@ -41,10 +52,29 @@ SHOWCASE = {
 }
 
 
+def dump_round(spark, sf_dir: str, round_name: str, suffix: str, names: list[str]) -> None:
+    out_dir = os.path.join(_ROOT, "plans", round_name)
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        df = CATALOG[name].fn(spark, sf_dir)
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(plan)
+        print(f"wrote {path} ({len(plan)} bytes)")
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     spark = get_spark(app_name="dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
+    if len(sys.argv) > 1:
+        round_name, suffix, names = sys.argv[1:4]
+        dump_round(spark, sf_dir, round_name, suffix, names.split(","))
+        spark.stop()
+        return
     out = [
         "# PLANS — executed physical plans of flagship queries\n",
         f"Generated by `python scripts/dump_plans.py` at `{sf_dir}`. The",
@@ -56,7 +86,7 @@ def main() -> None:
         df.collect()  # materialize so AQE finalizes the plan
         plan = df._jdf.queryExecution().executedPlan().toString()
         out.append(f"\n## {name}\n\n*{note}*\n\n```\n{plan.strip()}\n```\n")
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    with open(os.path.join(_ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     spark.stop()
     print("PLANS.md written")

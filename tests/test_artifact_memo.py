@@ -68,3 +68,64 @@ def test_build_barriers_released_after_artifact_write(spark):
         f"{len(_BARRIERS) - n_before} build-internal barrier(s) left "
         "registered after the artifact write"
     )
+
+
+def test_concurrent_builds_get_distinct_paths(spark):
+    """prebuild_artifacts runs builds from a thread pool: concurrent
+    builds of the same name must land in distinct dirs, and the
+    in-flight counter must return to zero."""
+    import os
+    from concurrent.futures import ThreadPoolExecutor
+
+    def build_for(i):
+        return lambda: spark.range(10 * (i + 1))
+
+    def run(i):
+        df = ce._memo_artifact(spark, f"sf_stress_{i}", "stress", build_for(i))
+        return ce._ARTIFACTS[(os.path.abspath(f"sf_stress_{i}"), "stress")], df.count()
+
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        results = [f.result(timeout=300) for f in [pool.submit(run, i) for i in range(8)]]
+    paths = [p for p, _ in results]
+    assert len(set(paths)) == len(paths)
+    assert [n for _, n in results] == [10 * (i + 1) for i in range(8)]
+    assert ce._BUILDS_IN_FLIGHT == 0
+
+
+def test_timed_phase_keeps_every_update_under_threads(monkeypatch):
+    """timed_phase's read-modify-write on the shared phase registry must
+    not lose updates when the prebuild pool's threads record at once."""
+    import sys
+    import threading
+    import types
+
+    from big_data_processing_spark.operators import util
+
+    # each thread's clock advances 0.5 s per read: every phase adds 0.5
+    local = threading.local()
+
+    def perf_counter():
+        local.t = getattr(local, "t", 0.0) + 0.5
+        return local.t
+
+    monkeypatch.setattr(util, "time", types.SimpleNamespace(perf_counter=perf_counter))
+    util.drain_phases()
+    n_threads, n_iter = 16, 2000
+
+    def work():
+        for _ in range(n_iter):
+            with util.timed_phase("stress"):
+                pass
+
+    saved = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work) for _ in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(saved)
+    assert util.drain_phases()["stress"]["setup"] == 0.5 * n_threads * n_iter

@@ -41,100 +41,60 @@ def test_entry_module_contract(spark):
     assert len(qs) >= 15
 
 
+# Public (spark, sf_dir) functions in plans/catalog*.py that are not
+# catalog entries, each with the reason it stays public.
+_PUBLIC_NON_ENTRIES = {
+    "prebuild_artifacts": "bench/perfbench warm the shared artifacts through it",
+    "curation_labels": "plans/curation.py builds its labelled frame from it",
+    "events_asof_aggregate": "test_plan_quality pins its zero-join as-of plan",
+    "knn_bruteforce_cosine": "exact-kNN reference for the ANN recall tests",
+}
+
+
 def test_registry_names_match_functions():
     """Guard against decorator mis-attachment during refactors: every
     catalog entry must be registered under its own function's name
-    (a @query decorator landing on a helper shows up here instantly)."""
+    (a @query decorator landing on a helper shows up here instantly).
+
+    Also enforces "no standalone twins": when entries merge, the
+    survivor's registered oracle computes the merged arm and the
+    retired function, oracle and tests are deleted (or the function
+    becomes a private ``_name`` arm helper).  So every public top-level
+    (spark, sf_dir) function in plans/catalog*.py must be a catalog
+    entry or carry a reason in _PUBLIC_NON_ENTRIES."""
+    import glob
+    import importlib
+    import inspect
+    import os
+
+    import big_data_processing_spark.plans as plans_pkg
+
     for name, q in CATALOG.items():
         assert q.fn.__name__ == name, (
             f"catalog entry '{name}' is bound to function '{q.fn.__name__}'"
         )
-
-
-def test_winsorized_exact_window_parity(spark, sf_dir):
-    """The exact-window winsorization twin (retired from the catalog in
-    r5 to free a rotation slot) must still produce EXACTLY the rows of
-    the production histogram cut-finder entry — the oracle-parity
-    evidence lives here now."""
-    from big_data_processing_spark.plans.catalog_more import (
-        lineitem_winsorized_stats,
-    )
-
-    exact = lineitem_winsorized_stats(spark, sf_dir).collect()
-    hist = CATALOG["lineitem_winsorized_hist"].fn(spark, sf_dir).collect()
-    assert [tuple(r) for r in exact] == [tuple(r) for r in hist]
-
-
-def test_cube_status_priority_oracle_parity(spark, duck, sf_dir):
-    """The single-family CUBE formulation (retired from the catalog in
-    r8: rollup_revenue's GROUPING SETS pass now serves the cube family
-    as its 'cube'/'all' arms) keeps its DuckDB oracle check here."""
-    from big_data_processing_spark.plans.catalog_more import (
-        CUBE_STATUS_PRIORITY_ORACLE,
-        cube_status_priority,
-    )
-
-    result = cube_status_priority(spark, sf_dir)
-    oracle = duck.sql(CUBE_STATUS_PRIORITY_ORACLE).df()
-    assert_frames_match(result, oracle)
-
-
-def test_cube_family_arm_equals_retired_entry(spark, sf_dir):
-    """Every row of the retired cube entry must be reconstructible from
-    the merged entry's 'cube' ∪ 'all' family arms — the evidence that
-    driver hashes on rollup_revenue still certify the cube semantics."""
-    from big_data_processing_spark.plans.catalog import CATALOG
-    from big_data_processing_spark.plans.catalog_more import (
-        cube_status_priority,
-    )
-
-    merged = CATALOG["rollup_revenue"].fn(spark, sf_dir)
-    arm = (
-        merged.filter("family IN ('cube', 'all')")
-        .select(
-            "orderstatus", "orderpriority", "grouping_level",
-            "n_orders", "revenue",
+    pkg_dir = os.path.dirname(plans_pkg.__file__)
+    public = set()
+    for path in sorted(glob.glob(os.path.join(pkg_dir, "catalog*.py"))):
+        mod = importlib.import_module(
+            f"{plans_pkg.__name__}.{os.path.basename(path)[:-3]}"
         )
-        .orderBy("grouping_level", "orderstatus", "orderpriority")
-        .collect()
+        for fname, fn in vars(mod).items():
+            if (
+                fname.startswith("_")
+                or not inspect.isfunction(fn)
+                or fn.__module__ != mod.__name__
+            ):
+                continue
+            if list(inspect.signature(fn).parameters)[:2] == ["spark", "sf_dir"]:
+                public.add(fname)
+    stray = sorted(public - set(CATALOG) - set(_PUBLIC_NON_ENTRIES))
+    assert not stray, (
+        f"public (spark, sf_dir) functions that are neither catalog entries "
+        f"nor listed in _PUBLIC_NON_ENTRIES: {stray}"
     )
-    retired = cube_status_priority(spark, sf_dir).collect()
-    assert [tuple(r) for r in arm] == [tuple(r) for r in retired]
-
-
-def test_simhash_pairs_oracle_parity(spark, duck, sf_dir):
-    """The pair-grain SimHash formulation (retired from the catalog in
-    r8: dedup_simhash now carries the pairs as its joined partner/
-    hamming columns) keeps its DuckDB oracle check here."""
-    from big_data_processing_spark.plans.catalog_ext import (
-        DEDUP_SIMHASH_PAIRS_ORACLE,
-        dedup_simhash_pairs,
-    )
-
-    result = dedup_simhash_pairs(spark, sf_dir)
-    oracle = duck.sql(DEDUP_SIMHASH_PAIRS_ORACLE).df()
-    assert_frames_match(result, oracle)
-
-
-def test_simhash_pair_rows_equal_retired_entry(spark, sf_dir):
-    """The merged entry's non-sentinel (partner_id != -1) rows must be
-    exactly the retired pair entry's rows."""
-    from big_data_processing_spark.plans.catalog import CATALOG
-    from big_data_processing_spark.plans.catalog_ext import (
-        dedup_simhash_pairs,
-    )
-
-    merged = (
-        CATALOG["dedup_simhash"].fn(spark, sf_dir)
-        .filter("partner_id != -1")
-        .selectExpr(
-            "id AS id_a", "partner_id AS id_b", "hamming"
-        )
-        .orderBy("id_a", "id_b")
-        .collect()
-    )
-    retired = dedup_simhash_pairs(spark, sf_dir).collect()
-    assert [tuple(r) for r in merged] == [tuple(r) for r in retired]
+    stale = sorted(set(_PUBLIC_NON_ENTRIES) - public)
+    assert not stale, f"_PUBLIC_NON_ENTRIES names no such function: {stale}"
 
 
 def test_knn_bruteforce_oracle_parity(spark, duck, sf_dir):
@@ -149,490 +109,6 @@ def test_knn_bruteforce_oracle_parity(spark, duck, sf_dir):
     result = knn_bruteforce_cosine(spark, sf_dir)
     oracle = duck.sql(KNN_BRUTEFORCE_ORACLE).df()
     assert_frames_match(result, oracle)
-
-
-def test_knn_pq_rerank_oracle_parity(spark, duck, sf_dir):
-    """The full-corpus PQ formulation (retired from the catalog in r9:
-    knn_ivf_pq_rerank serves it as the 'pq' family arm) keeps its
-    DuckDB oracle check here."""
-    from big_data_processing_spark.plans.catalog_ext import (
-        _pq_rerank_oracle,
-        knn_pq_rerank,
-    )
-
-    result = knn_pq_rerank(spark, sf_dir)
-    oracle = duck.sql(_pq_rerank_oracle(sf_dir)).df()
-    assert_frames_match(result, oracle)
-
-
-def test_pq_family_arm_equals_retired_entry(spark, sf_dir):
-    """The merged entry's 'pq' arm rows must be exactly the retired
-    knn_pq_rerank rows — the evidence that driver hashes on
-    knn_ivf_pq_rerank still certify the standalone PQ pipeline."""
-    from big_data_processing_spark.plans.catalog import CATALOG
-    from big_data_processing_spark.plans.catalog_ext import knn_pq_rerank
-
-    arm = (
-        CATALOG["knn_ivf_pq_rerank"].fn(spark, sf_dir)
-        .filter("variant = 'pq'")
-        .select("query_id", "neighbor_id", "cosine", "rank")
-        .orderBy("query_id", "rank")
-        .collect()
-    )
-    retired = (
-        knn_pq_rerank(spark, sf_dir).orderBy("query_id", "rank").collect()
-    )
-    assert [tuple(r) for r in arm] == [tuple(r) for r in retired]
-
-
-def test_curation_fraction_oracle_parity(spark, duck, sf_dir):
-    """The per-lang hash-fraction sample (retired from the catalog in
-    r9: curation_stratified_sample carries its aggregates as frac_*
-    columns) keeps its DuckDB oracle check here."""
-    from big_data_processing_spark.plans.catalog_ext import (
-        CURATION_FRACTION_SAMPLE_ORACLE,
-        curation_fraction_sample,
-    )
-
-    result = curation_fraction_sample(spark, sf_dir)
-    oracle = duck.sql(CURATION_FRACTION_SAMPLE_ORACLE).df()
-    assert_frames_match(result, oracle)
-
-
-def test_fraction_columns_equal_retired_entry(spark, sf_dir):
-    """Every lang's frac_* values on the merged entry must equal the
-    retired per-lang aggregate (for langs with a non-empty stratum —
-    all langs, since a lang with documents always has stratum rows)."""
-    from big_data_processing_spark.plans.catalog import CATALOG
-    from big_data_processing_spark.plans.catalog_ext import (
-        curation_fraction_sample,
-    )
-
-    merged = (
-        CATALOG["curation_stratified_sample"].fn(spark, sf_dir)
-        .select("lang", "frac_n_sampled", "frac_sum_doc_ids")
-        .distinct()
-        .orderBy("lang")
-        .collect()
-    )
-    retired = {r["lang"]: r for r in curation_fraction_sample(spark, sf_dir).collect()}
-    assert len(merged) >= len(retired)
-    for row in merged:
-        want = retired.get(row["lang"])
-        if want is None:  # lang sampled to zero by the fraction rule
-            assert (row["frac_n_sampled"], row["frac_sum_doc_ids"]) == (0, 0)
-        else:
-            assert row["frac_n_sampled"] == want["n_sampled"]
-            assert row["frac_sum_doc_ids"] == want["sum_doc_ids"]
-
-
-def test_range_attribution_oracle_parity(spark, duck, sf_dir):
-    """The bucketized range join (retired from the catalog in r9:
-    events_asof_last_purchase carries its aggregates) keeps its DuckDB
-    oracle check here."""
-    from big_data_processing_spark.plans.catalog_more import (
-        EVENTS_RANGE_ATTR_ORACLE,
-        events_range_join_attribution,
-    )
-
-    result = events_range_join_attribution(spark, sf_dir)
-    oracle = duck.sql(EVENTS_RANGE_ATTR_ORACLE).df()
-    assert_frames_match(result, oracle)
-
-
-def test_range_attribution_columns_equal_retired_entry(spark, sf_dir):
-    """The merged entry's non-purchase rows must carry exactly the
-    retired range-join aggregates."""
-    from big_data_processing_spark.plans.catalog import CATALOG
-    from big_data_processing_spark.plans.catalog_more import (
-        events_range_join_attribution,
-    )
-
-    merged = (
-        CATALOG["events_asof_last_purchase"].fn(spark, sf_dir)
-        .filter("n_pairs > 0")
-        .select("event_type", "n_pairs", "n_purchases", "range_avg_value")
-        .orderBy("event_type")
-        .collect()
-    )
-    retired = events_range_join_attribution(spark, sf_dir).collect()
-    assert [tuple(r) for r in merged] == [tuple(r) for r in retired]
-
-
-def test_hourly_tumbling_oracle_parity(spark, duck, sf_dir):
-    """The tumbling-window formulation (retired from the catalog in r5:
-    tumbling == hopping with slide==size, and the hopping entry is
-    hash-checked) keeps its DuckDB oracle check here."""
-    from big_data_processing_spark.plans.catalog import (
-        EVENTS_HOURLY_TUMBLING_ORACLE,
-        events_hourly_tumbling,
-    )
-
-    from .conftest import assert_frames_match
-
-    result = events_hourly_tumbling(spark, sf_dir)
-    oracle = duck.sql(EVENTS_HOURLY_TUMBLING_ORACLE).df()
-    assert_frames_match(result, oracle)
-
-
-def test_change_feed_oracle_parity(spark, duck, sf_dir):
-    """The (type, bucket)-grain change feed (retired from the catalog
-    in r10: txnlog_incremental_mv carries it as per-type pivot columns)
-    keeps its DuckDB oracle check here."""
-    from big_data_processing_spark.plans.catalog_more import (
-        TXNLOG_CHANGE_FEED_ORACLE,
-        txnlog_change_feed,
-    )
-
-    result = txnlog_change_feed(spark, sf_dir)
-    oracle = duck.sql(TXNLOG_CHANGE_FEED_ORACLE).df()
-    assert_frames_match(result, oracle)
-
-
-def test_change_feed_pivot_equals_retired_entry(spark, sf_dir):
-    """Unpivoting the merged entry's per-type columns must reconstruct
-    exactly the retired feed's (type, bucket) rows (types absent from a
-    bucket carry n=0 in the pivot and no row in the retired grain)."""
-    from big_data_processing_spark.plans.catalog import CATALOG
-    from big_data_processing_spark.plans.catalog_more import (
-        txnlog_change_feed,
-    )
-
-    merged = CATALOG["txnlog_incremental_mv"].fn(spark, sf_dir).collect()
-    pivots = {
-        "delete": "delete",
-        "insert": "insert",
-        "update_preimage": "update_pre",
-        "update_postimage": "update_post",
-    }
-    reconstructed = sorted(
-        (ctype, r["bucket"], r[f"n_{sfx}"], r[f"cents_{sfx}"])
-        for r in merged
-        for ctype, sfx in pivots.items()
-        if r[f"n_{sfx}"] > 0
-    )
-    retired = sorted(tuple(r) for r in txnlog_change_feed(spark, sf_dir).collect())
-    assert reconstructed == retired
-
-
-def test_quality_scores_oracle_parity(spark, duck, sf_dir):
-    """The standalone quality-features entry (retired from the catalog
-    in r10: doc_repetition_stats carries the columns in the same
-    single-scan projection) keeps its DuckDB oracle check here."""
-    from big_data_processing_spark.plans.catalog_ext import (
-        DOC_QUALITY_SCORES_ORACLE,
-        doc_quality_scores,
-    )
-
-    result = doc_quality_scores(spark, sf_dir)
-    oracle = duck.sql(DOC_QUALITY_SCORES_ORACLE).df()
-    assert_frames_match(result, oracle)
-
-
-def test_quality_columns_equal_retired_entry(spark, sf_dir):
-    """Projecting the merged entry's quality columns must reconstruct
-    exactly the retired entry's rows."""
-    from big_data_processing_spark.plans.catalog import CATALOG
-    from big_data_processing_spark.plans.catalog_ext import (
-        doc_quality_scores,
-    )
-
-    cols = [
-        "doc_id", "n_chars", "n_tokens", "n_punct", "n_stopwords",
-        "avg_token_len", "stopword_ratio", "punct_ratio", "quality_score",
-    ]
-    merged = (
-        CATALOG["doc_repetition_stats"].fn(spark, sf_dir)
-        .select(*cols)
-        .collect()
-    )
-    retired = doc_quality_scores(spark, sf_dir).collect()
-    assert [tuple(r) for r in merged] == [tuple(r) for r in retired]
-
-
-def test_jpeg_header_oracle_parity(spark, duck, sf_dir):
-    """The standalone JPEG marker-walk entry (retired from the catalog
-    in r10: multimodal_jpeg_decode_stats carries the geometry as its
-    hdr_* columns) keeps its DuckDB oracle check here."""
-    from big_data_processing_spark.plans.catalog_ext import (
-        MULTIMODAL_JPEG_HEADER_STATS_ORACLE,
-        multimodal_jpeg_header_stats,
-    )
-
-    result = multimodal_jpeg_header_stats(spark, sf_dir)
-    oracle = duck.sql(MULTIMODAL_JPEG_HEADER_STATS_ORACLE).df()
-    assert_frames_match(result, oracle)
-
-
-def test_jpeg_header_columns_equal_retired_entry(spark, sf_dir):
-    """Projecting the merged entry's hdr_* columns must reconstruct
-    exactly the retired marker-walk entry's rows."""
-    from big_data_processing_spark.plans.catalog import CATALOG
-    from big_data_processing_spark.plans.catalog_ext import (
-        multimodal_jpeg_header_stats,
-    )
-
-    merged = (
-        CATALOG["multimodal_jpeg_decode_stats"].fn(spark, sf_dir)
-        .selectExpr(
-            "media_id",
-            "hdr_width AS width",
-            "hdr_height AS height",
-            "hdr_channels AS channels",
-            "hdr_n_bytes AS n_bytes",
-        )
-        .collect()
-    )
-    retired = multimodal_jpeg_header_stats(spark, sf_dir).collect()
-    assert [tuple(r) for r in merged] == [tuple(r) for r in retired]
-
-
-def test_prefix_levenshtein_oracle_parity(spark, duck, sf_dir):
-    """The standalone tail-Levenshtein entry (retired from the catalog
-    in r11: dedup_ngram_jaccard carries edit_distance/max_len in its
-    single prefix-blocked self-join) keeps its DuckDB oracle check
-    here."""
-    from big_data_processing_spark.plans.catalog_more import (
-        DEDUP_PREFIX_LEVENSHTEIN_ORACLE,
-        dedup_prefix_levenshtein,
-    )
-
-    result = dedup_prefix_levenshtein(spark, sf_dir)
-    oracle = duck.sql(DEDUP_PREFIX_LEVENSHTEIN_ORACLE).df()
-    assert_frames_match(result, oracle)
-
-
-def test_prefix_levenshtein_columns_equal_retired_entry(spark, sf_dir):
-    """Projecting the merged entry's edit-distance columns must
-    reconstruct exactly the retired entry's rows — both twins block on
-    the same 40-char normalized prefix, so the pair sets are identical
-    by construction and the projection is lossless."""
-    from big_data_processing_spark.plans.catalog import CATALOG
-    from big_data_processing_spark.plans.catalog_more import (
-        dedup_prefix_levenshtein,
-    )
-
-    merged = (
-        CATALOG["dedup_ngram_jaccard"].fn(spark, sf_dir)
-        .select("id_a", "id_b", "edit_distance", "max_len")
-        .orderBy("id_a", "id_b")
-        .collect()
-    )
-    retired = dedup_prefix_levenshtein(spark, sf_dir).collect()
-    assert [tuple(r) for r in merged] == [tuple(r) for r in retired]
-
-
-def test_binary_payload_stats_oracle_parity(spark, duck, sf_dir):
-    """The standalone payload-byte-stats entry (retired from the
-    catalog in r12: multimodal_stub_features carries it as its
-    'source' arm) keeps its DuckDB oracle check here."""
-    from big_data_processing_spark.plans.catalog_ext import (
-        BINARY_PAYLOAD_STATS_ORACLE,
-        binary_payload_stats,
-    )
-
-    result = binary_payload_stats(spark, sf_dir)
-    oracle = duck.sql(BINARY_PAYLOAD_STATS_ORACLE).df()
-    assert_frames_match(result, oracle)
-
-
-def test_payload_source_arm_equal_retired_entry(spark, sf_dir):
-    """Projecting the merged entry's 'source' arm back to the retired
-    entry's columns must reconstruct its rows exactly — the byte stats
-    are the same aggregates over the same media frame; only the route
-    changed (aggregated off the shared Arrow decode pass instead of a
-    second JVM scan), which is precisely what this pin certifies."""
-    from big_data_processing_spark.plans.catalog import CATALOG
-    from big_data_processing_spark.plans.catalog_ext import (
-        binary_payload_stats,
-    )
-
-    merged = (
-        CATALOG["multimodal_stub_features"].fn(spark, sf_dir)
-        .filter("arm = 'source'")
-        .selectExpr(
-            "key AS source", "n_payloads", "total_bytes", "max_bytes",
-            "avg_bytes",
-        )
-        .orderBy("source")
-        .collect()
-    )
-    retired = binary_payload_stats(spark, sf_dir).collect()
-    assert [tuple(r) for r in merged] == [tuple(r) for r in retired]
-
-
-def test_lang_rebalance_oracle_parity(spark, duck, sf_dir):
-    """The standalone language-rebalance entry (retired from the
-    catalog in r11: curation_domain_caps carries it as its
-    'lang_rebalance' arm) keeps its DuckDB oracle check here."""
-    from big_data_processing_spark.plans.catalog_ext import (
-        CURATION_LANG_REBALANCE_ORACLE,
-        curation_lang_rebalance,
-    )
-
-    result = curation_lang_rebalance(spark, sf_dir)
-    oracle = duck.sql(CURATION_LANG_REBALANCE_ORACLE).df()
-    assert_frames_match(result, oracle)
-
-
-def test_domain_caps_arm_oracle_parity(spark, duck, sf_dir):
-    """The merged entry's 'domain_cap' arm must still match the
-    pre-merge standalone domain-caps oracle (projected back to the
-    original columns)."""
-    from big_data_processing_spark.plans.catalog import CATALOG
-    from big_data_processing_spark.plans.catalog_ext import (
-        DOMAIN_CAPS_STANDALONE_ORACLE,
-    )
-
-    arm = (
-        CATALOG["curation_domain_caps"].fn(spark, sf_dir)
-        .filter("arm = 'domain_cap'")
-        .selectExpr(
-            "mix_key AS source", "n_docs", "n_kept", "n_dropped",
-            "min_kept_quality", "max_quality",
-        )
-        .orderBy("source")
-    )
-    oracle = duck.sql(DOMAIN_CAPS_STANDALONE_ORACLE).df()
-    assert_frames_match(arm, oracle)
-
-
-def test_lang_rebalance_arm_equals_retired_entry(spark, sf_dir):
-    """Projecting the merged entry's 'lang_rebalance' arm must
-    reconstruct exactly the retired entry's rows."""
-    from big_data_processing_spark.plans.catalog import CATALOG
-    from big_data_processing_spark.plans.catalog_ext import (
-        curation_lang_rebalance,
-    )
-
-    merged = (
-        CATALOG["curation_domain_caps"].fn(spark, sf_dir)
-        .filter("arm = 'lang_rebalance'")
-        .selectExpr("mix_key AS lang", "n_docs", "n_kept", "kept_frac")
-        .orderBy("lang")
-        .collect()
-    )
-    retired = curation_lang_rebalance(spark, sf_dir).collect()
-    assert [tuple(r) for r in merged] == [tuple(r) for r in retired]
-
-
-def test_knn_ivf_refresh_oracle_parity(spark, duck, sf_dir):
-    """The standalone IVF-maintenance entry (retired from the catalog
-    in r13: knn_ivf_cosine carries it as its 'refresh' arm) keeps its
-    DuckDB oracle check here."""
-    from big_data_processing_spark.plans.catalog_ext import (
-        _ivf_refresh_oracle,
-        knn_ivf_refresh,
-    )
-
-    result = knn_ivf_refresh(spark, sf_dir)
-    oracle = duck.sql(_ivf_refresh_oracle(sf_dir)).df()
-    assert_frames_match(result, oracle)
-
-
-def test_ivf_refresh_arm_equals_retired_entry(spark, sf_dir):
-    """Un-pivoting the merged entry's 'refresh' arm back to the
-    retired entry's (cell x metric) values must reconstruct its rows
-    exactly — same txnlog MERGE, same assignment, same integer sums;
-    only the shape changed."""
-    from big_data_processing_spark.plans.catalog import CATALOG
-    from big_data_processing_spark.plans.catalog_ext import (
-        _IVF_REPORT_METRICS,
-        knn_ivf_refresh,
-    )
-
-    merged_rows = (
-        CATALOG["knn_ivf_cosine"].fn(spark, sf_dir)
-        .filter("arm = 'refresh'")
-        .select("k1", "metric", "m")
-        .collect()
-    )
-    by_cell: dict = {}
-    for r in merged_rows:
-        by_cell.setdefault(r.k1, {})[r.metric] = r.m
-    retired = {
-        r.cell: {m: int(r[m]) for m in _IVF_REPORT_METRICS}
-        for r in knn_ivf_refresh(spark, sf_dir).collect()
-    }
-    assert {int(c): v for c, v in by_cell.items()} == retired
-
-
-def test_bucket_skew_report_oracle_parity(spark, duck, sf_dir):
-    """The standalone skew-observability entry (retired from the
-    catalog in r13: dedup_minhash_pairs carries it as its
-    'skew:<metric>' rows) keeps its DuckDB oracle check here."""
-    from big_data_processing_spark.plans.catalog_ext import (
-        DEDUP_BUCKET_SKEW_ORACLE,
-        _minhash_bands_cte,
-        dedup_bucket_skew_report,
-    )
-
-    result = dedup_bucket_skew_report(spark, sf_dir)
-    oracle = duck.sql(
-        DEDUP_BUCKET_SKEW_ORACLE.format(bands_cte=_minhash_bands_cte())
-    ).df()
-    assert_frames_match(result, oracle)
-
-
-def test_skew_arm_equals_retired_entry(spark, sf_dir):
-    """Projecting the merged entry's 'skew:<metric>' rows back to the
-    retired report's columns must reconstruct it exactly — same banded
-    layout, same aggregate; only the shape changed."""
-    from big_data_processing_spark.plans.catalog import CATALOG
-    from big_data_processing_spark.plans.catalog_ext import (
-        _SKEW_METRICS,
-        dedup_bucket_skew_report,
-    )
-
-    merged = {
-        r.arm.split(":", 1)[1]: r.id_b
-        for r in CATALOG["dedup_minhash_pairs"].fn(spark, sf_dir)
-        .filter("arm LIKE 'skew:%'")
-        .collect()
-    }
-    retired = dedup_bucket_skew_report(spark, sf_dir).collect()[0]
-    assert merged == {m: int(retired[m]) for m in _SKEW_METRICS}
-
-
-def test_events_session_window_oracle_parity(spark, duck, sf_dir):
-    """The standalone native-session_window entry (retired from the
-    catalog in r13: events_sessionize joins it in as its ``*_native``
-    columns) keeps its DuckDB oracle check here."""
-    from big_data_processing_spark.plans.catalog_more import (
-        EVENTS_SESSION_WINDOW_ORACLE,
-        events_session_window,
-    )
-
-    result = events_session_window(spark, sf_dir)
-    oracle = duck.sql(EVENTS_SESSION_WINDOW_ORACLE).df()
-    assert_frames_match(result, oracle)
-
-
-def test_session_native_arm_equals_retired_entry(spark, sf_dir):
-    """Projecting the merged entry's native columns back to the retired
-    entry's schema must reconstruct its rows exactly — the inner join
-    on (user_id, session_seq) is lossless precisely when both
-    sessionizations split identically, which is the certificate the
-    merge exists to carry."""
-    from big_data_processing_spark.plans.catalog import CATALOG
-    from big_data_processing_spark.plans.catalog_more import (
-        events_session_window,
-    )
-
-    merged = (
-        CATALOG["events_sessionize"].fn(spark, sf_dir)
-        .selectExpr(
-            "user_id",
-            "session_start",
-            "session_end",
-            "n_events_native AS n_events",
-            "session_value_native AS session_value",
-        )
-        .orderBy("user_id", "session_start")
-        .collect()
-    )
-    retired = events_session_window(spark, sf_dir).collect()
-    assert [tuple(r) for r in merged] == [tuple(r) for r in retired]
 
 
 def test_session_gap_boundary_semantics_agree(spark):
@@ -665,39 +141,3 @@ def test_session_gap_boundary_semantics_agree(spark):
         .collect()
     }
     assert native == {1: 1, 2: 2}, native
-
-
-def test_dedup_cluster_assign_oracle_parity(spark, duck, sf_dir):
-    """The standalone cluster-summary entry (retired from the catalog
-    in r13: dedup_canonical_docs carries it as its min_doc/max_doc
-    columns) keeps its DuckDB oracle check here."""
-    from big_data_processing_spark.plans.catalog_ext import (
-        _cluster_oracle,
-        dedup_cluster_assign,
-    )
-
-    result = dedup_cluster_assign(spark, sf_dir)
-    oracle = duck.sql(_cluster_oracle()).df()
-    assert_frames_match(result, oracle)
-
-
-def test_cluster_summary_columns_equal_retired_entry(spark, sf_dir):
-    """Filtering the merged entry to edge clusters (n_docs > 1) and
-    projecting the member-range columns must reconstruct the retired
-    summary exactly — both aggregate the SAME shared components
-    artifact, so any divergence means the singleton COALESCE or the
-    member count drifted between the two formulations."""
-    from big_data_processing_spark.plans.catalog import CATALOG
-    from big_data_processing_spark.plans.catalog_ext import (
-        dedup_cluster_assign,
-    )
-
-    merged = (
-        CATALOG["dedup_canonical_docs"].fn(spark, sf_dir)
-        .filter("n_docs > 1")
-        .select("cluster_id", "n_docs", "min_doc", "max_doc")
-        .orderBy("cluster_id")
-        .collect()
-    )
-    retired = dedup_cluster_assign(spark, sf_dir).collect()
-    assert [tuple(r) for r in merged] == [tuple(r) for r in retired]

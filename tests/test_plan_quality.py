@@ -244,21 +244,6 @@ def test_decontamination_broadcasts_eval_universe(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
-def test_winsorized_cuts_broadcast(spark, sf_dir):
-    """The per-group clip-threshold table (3 rows) must broadcast back
-    to the fact — a sort-merge here would shuffle the fact twice.
-    (The exact-window formulation left the catalog in r5; it remains
-    the local parity twin, so its plan contract stays pinned here.)"""
-    from big_data_processing_spark.plans.catalog_more import (
-        lineitem_winsorized_stats,
-    )
-
-    df = lineitem_winsorized_stats(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_winsorized_hist_no_full_sort_window(spark, sf_dir):
     """The histogram cut-finder must never rank the full fact: the
     exact-window variant sorts (cents, l_orderkey, l_linenumber) per

@@ -543,15 +543,27 @@ def test_bloom_metadata_sized_no_false_negatives(spark):
     assert fp / 10_000 < 0.2, f"false-positive rate {fp / 10_000} too high"
 
 
-def test_parquet_row_count_matches_scan(spark):
+def test_parquet_row_count_matches_scan(spark, tmp_path):
     """The metadata row count the bloom entry sizes m with must equal
-    the scan's count — footer metadata is exact, not an estimate."""
+    the scan's count — footer metadata is exact, not an estimate.  Also
+    for a table directory whose part files have no .parquet suffix
+    (beside a _SUCCESS marker and a hidden checksum file, which the
+    scan skips)."""
+    import shutil
+
     from big_data_processing_spark.sources.readers import (
         load_table,
         parquet_row_count,
     )
 
     sf = "/root/testdata/sf0.001"
-    assert parquet_row_count(sf, "orders") == load_table(
-        spark, sf, "orders"
-    ).count()
+    unsuffixed = tmp_path / "orders.parquet"
+    unsuffixed.mkdir()
+    for part in ("part-00000", "part-00001"):
+        shutil.copyfile(f"{sf}/orders.parquet", unsuffixed / part)
+    (unsuffixed / "_SUCCESS").write_text("")
+    (unsuffixed / ".part-00002.crc").write_text("")
+    for sf_dir in (sf, str(tmp_path)):
+        assert parquet_row_count(sf_dir, "orders") == load_table(
+            spark, sf_dir, "orders"
+        ).count()

@@ -26,14 +26,7 @@ def test_cdf_fixture_is_shared_and_never_mutated(spark, sf_dir):
     assert latest_version(p1) == CDF_V_OPTIMIZE
 
     # run every consumer of the shared table; none may commit to it
-    # (txnlog_change_feed was absorbed into txnlog_incremental_mv in
-    # r10 but keeps its standalone fn, still a read-only consumer)
-    from big_data_processing_spark.plans.catalog_more import (
-        txnlog_change_feed,
-    )
-
     consumers = [
-        ("txnlog_change_feed (retired)", txnlog_change_feed),
         ("txnlog_incremental_mv", CATALOG["txnlog_incremental_mv"].fn),
         (
             "dashboard_rollup_incremental",
