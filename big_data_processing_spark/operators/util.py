@@ -2,11 +2,16 @@
 
 from __future__ import annotations
 
+import logging
 import threading
 import time
+from concurrent.futures import ThreadPoolExecutor, as_completed
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
+
+_log = logging.getLogger(__name__)
 
 _BYTE_SUFFIX = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
 
@@ -202,6 +207,31 @@ def register_checkpoint_release(df: DataFrame) -> DataFrame:
     return df
 
 
+# Release paths must never fail their caller (a barrier whose context
+# already died is harmless), but a failure is still counted and logged.
+_RELEASE_FAILURES = 0
+_RELEASE_LOCK = threading.Lock()
+
+
+def call_release(release) -> None:
+    """Run one barrier release callable; count and log a failure
+    instead of raising it."""
+    global _RELEASE_FAILURES
+    try:
+        release()
+    except Exception as e:
+        with _RELEASE_LOCK:
+            _RELEASE_FAILURES += 1
+        _log.warning("cache release failed: %r", e)
+
+
+def release_failures() -> int:
+    """How many barrier / checkpoint releases have failed in this
+    process."""
+    with _RELEASE_LOCK:
+        return _RELEASE_FAILURES
+
+
 def release_barriers() -> int:
     """Release every registered barrier; returns how many.
 
@@ -216,10 +246,7 @@ def release_barriers() -> int:
     which is what bench.py and the test fixture do."""
     n = 0
     while _BARRIERS:
-        try:
-            _BARRIERS.pop()()
-        except Exception:
-            pass
+        call_release(_BARRIERS.pop())
         n += 1
     return n
 
@@ -275,9 +302,43 @@ def release_local_checkpoint(df: DataFrame) -> None:
     (LogicalRDD), so they must be released through the analyzed plan's
     RDD handle (verified: getPersistentRDDs drops to zero). No-op for
     frames that are not checkpoint scans."""
-    try:
+
+    def release() -> None:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getName().endswith("LogicalRDD"):
             plan.rdd().unpersist(False)
-    except Exception:
-        pass
+
+    call_release(release)
+
+
+def run_concurrently(
+    spark: SparkSession, *branches, max_workers: int | None = None
+) -> None:
+    """Run independent driver-side branches (no-argument callables that
+    each submit their own Spark actions) at once.
+
+    Spark only runs actions one after another because a driver thread
+    blocks on each; submitted from separate threads, a later action's
+    tasks fill the cores an earlier one leaves idle.  The pool has one
+    thread per branch unless ``max_workers`` caps it.  Each branch runs
+    under ``inheritable_thread_target``, so its jobs carry the caller's
+    job group, scheduler pool and other local properties.  Every branch
+    runs to completion; then the first error raised, if any, propagates
+    — so a caller's ``finally`` never frees a cache a branch still
+    reads."""
+
+    def inherit(branch):
+        # one wrapper per branch: each copies the properties afresh, and
+        # the branch's SQL executions then mutate its own copy
+        wrap = inheritable_thread_target(spark)
+        # pinned-thread mode off returns the session unchanged: JVM
+        # threads are then not tied to Python threads, nothing to carry
+        return branch if wrap is spark else wrap(branch)
+
+    with ThreadPoolExecutor(max_workers=max_workers or len(branches)) as pool:
+        futures = [pool.submit(inherit(b)) for b in branches]
+        first = next(
+            (f.exception() for f in as_completed(futures) if f.exception()), None
+        )
+    if first is not None:
+        raise first

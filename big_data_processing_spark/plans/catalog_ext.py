@@ -77,7 +77,7 @@ from ..operators.textstats import (
     language_id,
     quality_features,
 )
-from ..operators.util import spread
+from ..operators.util import run_concurrently, spread
 from .catalog import _t, query
 
 _TOKENS = "regexp_split_to_array(lower(text), '\\s+')"
@@ -430,7 +430,7 @@ def _memo_artifact(
                 _ARTIFACT_DIR = tempfile.mkdtemp(prefix="spark_artifact_memo_")
                 atexit.register(shutil.rmtree, _ARTIFACT_DIR, ignore_errors=True)
             _BUILDS_IN_FLIGHT += 1
-        from ..operators.util import _BARRIERS
+        from ..operators.util import _BARRIERS, call_release
 
         try:
             # mkdtemp makes every build's path unique, across threads and
@@ -463,10 +463,7 @@ def _memo_artifact(
                 with _MEMO_LOCK:
                     if _BUILDS_IN_FLIGHT == 1:
                         while len(_BARRIERS) > n_barriers_before:
-                            try:
-                                _BARRIERS.pop()()
-                            except Exception:
-                                pass
+                            call_release(_BARRIERS.pop())
         finally:
             with _MEMO_LOCK:
                 _BUILDS_IN_FLIGHT -= 1
@@ -499,7 +496,7 @@ def prebuild_artifacts(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     build planned concurrently would silently inherit AQE-off and the
     micro shuffle sizing."""
     import time as _time
-    from concurrent.futures import ThreadPoolExecutor
+    from functools import partial
 
     from . import txnfix
 
@@ -548,10 +545,7 @@ def prebuild_artifacts(spark: SparkSession, sf_dir: str) -> dict[str, float]:
 
     # 4 in flight: enough to fill stage tails, not enough to thrash
     # the scheduler (guide §2.6: "2-3 jobs in flight is plenty")
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        futures = {n: pool.submit(_run, n) for n in tasks}
-        for n, fut in futures.items():
-            fut.result()  # propagate the first build failure
+    run_concurrently(spark, *(partial(_run, n) for n in tasks), max_workers=4)
 
     t0 = _time.perf_counter()
     dedup_cc_star_contraction(spark, sf_dir)  # build only; frame stays lazy

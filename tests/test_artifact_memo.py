@@ -129,3 +129,37 @@ def test_timed_phase_keeps_every_update_under_threads(monkeypatch):
     finally:
         sys.setswitchinterval(saved)
     assert util.drain_phases()["stress"]["setup"] == 0.5 * n_threads * n_iter
+
+
+def _broken_release():
+    raise RuntimeError("stale block")
+
+
+def test_failed_barrier_release_is_counted_and_logged(caplog):
+    """release_barriers keeps going past a release that raises, but the
+    failure is counted and logged, not swallowed."""
+    import logging
+
+    from big_data_processing_spark.operators import util
+
+    before = util.release_failures()
+    util._BARRIERS.append(_broken_release)
+    with caplog.at_level(logging.WARNING, logger=util.__name__):
+        util.release_barriers()
+    assert util.release_failures() == before + 1
+    assert "stale block" in caplog.text
+    assert not util._BARRIERS
+
+
+def test_failed_build_barrier_release_is_counted(spark):
+    """The memo's release of a build's own barriers counts a failure
+    the same way."""
+    from big_data_processing_spark.operators import util
+
+    def build():
+        util._BARRIERS.append(_broken_release)
+        return spark.range(3)
+
+    before = util.release_failures()
+    assert ce._memo_artifact(spark, "sf_release_fail", "broken", build).count() == 3
+    assert util.release_failures() == before + 1

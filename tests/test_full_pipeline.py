@@ -4,15 +4,25 @@ cardinalities scaled to the fixture)."""
 
 from __future__ import annotations
 
+import time
+
+import pytest
 from pyspark.sql import functions as F
 
+from big_data_processing_spark.plans import weather as W
 from big_data_processing_spark.plans.pipeline import run_full_pipeline
 
+from .conftest import assert_frames_match
 from .weather_fixture import generate
 
 
-def test_full_pipeline_builds_warehouse(spark, tmp_path):
-    info = generate(str(tmp_path / "src"), years=(2012, 2013))
+@pytest.fixture(scope="module")
+def weather_src(tmp_path_factory):
+    return generate(str(tmp_path_factory.mktemp("weather_src")), years=(2012, 2013))
+
+
+def test_full_pipeline_builds_warehouse(spark, tmp_path, weather_src):
+    info = weather_src
     paths = run_full_pipeline(
         spark,
         info["weather_csv"],
@@ -49,6 +59,27 @@ def test_full_pipeline_builds_warehouse(spark, tmp_path):
         got = spark.read.parquet(paths[name]).count()
         assert got == expected, f"{name}: {got} != {expected}"
 
+    # the concurrently written tables hold exactly the rows each builder
+    # yields when collected on its own
+    weather = W.ingest_weather_csv(spark, info["weather_csv"])
+    location = W.ingest_location_csv(spark, info["location_csv"])
+    direct = {
+        "locations": location,
+        "district_monthly_weather": W.district_monthly_weather(weather, location),
+        "highest_precipitation": W.highest_precipitation(weather),
+        "top_temperate_cities": W.top_temperate_cities(weather, location),
+        "evapotranspiration_by_season": W.evapotranspiration_by_season(
+            weather, location
+        ),
+        "radiation_analysis": W.radiation_analysis(weather),
+        "weekly_max_temp_hottest_months": W.weekly_max_temp_hottest_months(
+            weather, location
+        ),
+        "ml_feature_statistics": W.ml_feature_statistics(weather),
+    }
+    for name, df in direct.items():
+        assert_frames_match(spark.read.parquet(paths[name]), df.toPandas())
+
     # fact partitioned by year → pruning works
     fact = spark.read.parquet(paths["weather_fact"])
     assert set(r.year for r in fact.select("year").distinct().collect()) == {2012, 2013}
@@ -73,6 +104,82 @@ def test_full_pipeline_builds_warehouse(spark, tmp_path):
 
     model = load_model(paths["et_model"])
     assert isinstance(predict_single(model, spark, 8.0, 5.0, 12.0), float)
+
+
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_failed_branch_propagates_after_the_others_finish(
+    spark, tmp_path, weather_src, monkeypatch
+):
+    """One output builder raises: the error reaches the caller only
+    after every other branch's jobs are done, and the cached fact is
+    released."""
+
+    def boom(weather):
+        raise RuntimeError("radiation_analysis failed")
+
+    monkeypatch.setattr(W, "radiation_analysis", boom)
+    before = _persistent_rdds(spark)
+    out = tmp_path / "warehouse"
+    with pytest.raises(RuntimeError, match="radiation_analysis failed"):
+        run_full_pipeline(
+            spark, weather_src["weather_csv"], weather_src["location_csv"], str(out)
+        )
+    written = {p.name for p in out.iterdir() if (p / "_SUCCESS").exists()}
+    assert written == {
+        "weather_fact",
+        "locations",
+        "district_monthly_weather",
+        "highest_precipitation",
+        "top_temperate_cities",
+        "evapotranspiration_by_season",
+        "weekly_max_temp_hottest_months",
+        "ml_feature_statistics",
+        "ml_model_performance",
+    }
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    assert _persistent_rdds(spark) <= before
+
+
+def _group_jobs(spark, group: str, want: int = 0, timeout: float = 30.0) -> set[int]:
+    """Job ids of ``group`` once the (asynchronous) status store holds
+    at least ``want`` of them."""
+    tracker = spark.sparkContext.statusTracker()
+    deadline = time.monotonic() + timeout
+    while True:
+        jobs = set(tracker.getJobIdsForGroup(group))
+        if len(jobs) >= want or time.monotonic() > deadline:
+            return jobs
+        time.sleep(0.05)
+
+
+def test_pipeline_jobs_carry_the_callers_job_group(spark, tmp_path, weather_src):
+    """Jobs submitted from the pipeline's pool threads belong to the job
+    group the caller set, like jobs of a serial run would."""
+    sc = spark.sparkContext
+
+    def mark(group: str) -> int:
+        sc.setJobGroup(group, group)
+        sc.parallelize([1]).count()
+        return max(_group_jobs(spark, group, want=1))
+
+    try:
+        first = mark("pipeline-before")
+        sc.setJobGroup("pipeline-run", "pipeline-run")
+        run_full_pipeline(
+            spark,
+            weather_src["weather_csv"],
+            weather_src["location_csv"],
+            str(tmp_path / "warehouse"),
+        )
+        last = mark("pipeline-after")
+    finally:
+        sc._jsc.clearJobGroup()
+    started = set(range(first + 1, last))  # job ids are allocated in order
+    assert len(started) > 10
+    assert started == _group_jobs(spark, "pipeline-run", want=len(started))
 
 
 def test_pii_scrub_leaves_no_matches(spark, sf_dir):

@@ -97,6 +97,30 @@ def test_sink_replay_is_idempotent(spark, dirs):
     assert spark.read.parquet(str(dirs["fact"])).count() == 2 * n1
 
 
+def test_sink_write_failure_propagates_after_the_other_write(spark, dirs):
+    """The sink's two writes run at once: when the derived-partial write
+    fails, the fact append still completes, the error reaches the
+    stream, and the persisted batch is released."""
+    from big_data_processing_spark.streaming.ingest import (
+        _typed_weather,
+        make_ingest_sink,
+    )
+
+    info = generate(str(dirs["srcdata"]), years=(2013, 2013))
+    batch = _typed_weather(
+        spark.read.option("header", "true")
+        .schema(W.WEATHER_SCHEMA)
+        .csv(info["weather_csv"])
+    )
+    dirs["derived"].write_text("a file where the derived table should go")
+    sink = make_ingest_sink(str(dirs["fact"]), str(dirs["derived"]))
+    with pytest.raises(Exception, match="derived"):
+        sink(batch, 0)
+    assert spark.read.parquet(str(dirs["fact"])).count() == info["n_clean_weather"]
+    level = batch.storageLevel
+    assert not (level.useMemory or level.useDisk)
+
+
 def test_derived_table_incremental_refresh(spark, dirs):
     info = generate(str(dirs["srcdata"]), years=(2013, 2013))
     src = Path(info["weather_csv"])
