@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import DEFAULT_MAX_BUCKET_SIZE, cap_bucket_size
-from .util import persist_barrier, spread
+from .util import persist_barrier, session_expr_cache, spread
 
 
 def _to_double(arr: Column) -> Column:
@@ -120,7 +120,7 @@ def signature_bits(vec: Column, planes: list[list[float]]) -> Column:
     construction and the LSH entries rebuild plans every bench run
     (r13; same rationale as :func:`_ivf_cell_fns`)."""
     key = ("sig_bits", tuple(tuple(p) for p in planes), str(vec))
-    cached = _pq_cache().get(key)
+    cached = session_expr_cache().get(key)
     if cached is not None:
         return cached
     import numpy as _np
@@ -136,7 +136,7 @@ def signature_bits(vec: Column, planes: list[list[float]]) -> Column:
         )
         term = bit * F.lit(1 << j).cast("long")
         sig = term if sig is None else sig + term
-    _pq_cache()[key] = sig
+    session_expr_cache()[key] = sig
     return sig
 
 
@@ -267,7 +267,7 @@ def _ivf_cell_fns(centroids: "list[list[float]]"):
     whole IVF family.  A Column is an immutable unresolved expression,
     so reuse across queries is safe; keying on ``str(vec)`` scopes the
     memo to the named input column, and the cache self-invalidates on
-    SparkContext change (see :func:`_pq_cache`)."""
+    SparkContext change (see :func:`.util.session_expr_cache`)."""
     ckey = ("ivf_cells", tuple(tuple(c) for c in centroids))
 
     def _build_dists(vec: Column) -> Column:
@@ -300,21 +300,21 @@ def _ivf_cell_fns(centroids: "list[list[float]]"):
 
     def cell_dists(vec: Column) -> Column:
         key = (*ckey, "dists", str(vec))
-        col = _pq_cache().get(key)
+        col = session_expr_cache().get(key)
         if col is None:
             col = _build_dists(vec)
-            _pq_cache()[key] = col
+            session_expr_cache()[key] = col
         return col
 
     def nearest_cells(vec: Column, n: int) -> Column:
         key = (*ckey, "nearest", n, str(vec))
-        col = _pq_cache().get(key)
+        col = session_expr_cache().get(key)
         if col is None:
             d = cell_dists(vec)
             idx = F.sequence(F.lit(0), F.lit(len(centroids) - 1))
             pairs = F.arrays_zip(d.alias("d"), idx.alias("i"))
             col = F.slice(F.array_sort(pairs), 1, n).getField("i")
-            _pq_cache()[key] = col
+            session_expr_cache()[key] = col
         return col
 
     return cell_dists, nearest_cells
@@ -675,29 +675,6 @@ def build_pq_index(
     return fit_pq_codebooks(train, m=m, k=k, seed=seed)
 
 
-_PQ_EXPR_CACHE: dict = {}
-
-
-def _pq_cache() -> dict:
-    """The memo dict, invalidated when the JVM gateway changes: cached
-    Column objects wrap py4j JavaObjects, so entries built against a
-    stopped SparkContext would raise stale-object errors from a new
-    session. Keying the whole cache by the active context identity
-    (and clearing on change) also bounds growth to one session's
-    codebooks."""
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    # (applicationId, startTime) is unique per live context; id(sc)
-    # would be reusable after GC and could serve Column handles from a
-    # dead JVM gateway (ADVICE r4).
-    tag = (sc.applicationId, sc.startTime) if sc is not None else None
-    if _PQ_EXPR_CACHE.get("_tag") != tag:
-        _PQ_EXPR_CACHE.clear()
-        _PQ_EXPR_CACHE["_tag"] = tag
-    return _PQ_EXPR_CACHE
-
-
 def _codebook_key(codebooks) -> tuple:
     return tuple(tuple(tuple(c) for c in book) for book in codebooks)
 
@@ -713,7 +690,7 @@ def _codebook_lit(book: "list[list[float]]") -> Column:
     for 16 codebooks) that would otherwise be paid on every query
     build."""
     key = ("lit", tuple(tuple(c) for c in book))
-    col = _pq_cache().get(key)
+    col = session_expr_cache().get(key)
     if col is None:
         import numpy as _np
 
@@ -726,7 +703,7 @@ def _codebook_lit(book: "list[list[float]]") -> Column:
                 for cent in book
             ]
         )
-        _pq_cache()[key] = col
+        session_expr_cache()[key] = col
     return col
 
 
@@ -769,7 +746,7 @@ def pq_encode(
     nv = F.transform(F.col("_dv"), lambda x: x / F.col("_nrm"))
     normed = base.select("id", nv.alias("_nv"), *keeps)
     ckey = ("codes", _codebook_key(codebooks))
-    codes_expr = _pq_cache().get(ckey)
+    codes_expr = session_expr_cache().get(ckey)
     if codes_expr is None:
         codes = []
         for j, book in enumerate(codebooks):
@@ -778,7 +755,7 @@ def pq_encode(
                 (F.array_position(darr, F.array_min(darr)) - 1).cast("int")
             )
         codes_expr = F.array(*codes)
-        _pq_cache()[ckey] = codes_expr
+        session_expr_cache()[ckey] = codes_expr
     return normed.select("id", codes_expr.alias("codes"), *keeps)
 
 
@@ -810,7 +787,7 @@ def _pq_query_luts(
         )
     )
     lkey = ("luts", _codebook_key(codebooks))
-    luts = _pq_cache().get(lkey)
+    luts = session_expr_cache().get(lkey)
     if luts is None:
         luts = [
             _sub_dists(F.col("q_vec"), _codebook_lit(book), j, sub).alias(
@@ -818,7 +795,7 @@ def _pq_query_luts(
             )
             for j, book in enumerate(codebooks)
         ]
-        _pq_cache()[lkey] = luts
+        session_expr_cache()[lkey] = luts
     return q.select("query_id", *luts)
 
 

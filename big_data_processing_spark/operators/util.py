@@ -7,6 +7,7 @@ import threading
 import time
 from concurrent.futures import ThreadPoolExecutor, as_completed
 from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
@@ -98,53 +99,89 @@ def spread(df: DataFrame, *by: str, cap: int | None = None) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Cache-lifetime ownership for persist() barriers
+# Session-bound state: barrier lifetime and the session cache
 # ---------------------------------------------------------------------------
 # Operators that persist() an intermediate (LSH signatures, SimHash
-# fingerprints) register it here: the barrier must outlive the RETURNED
-# lazy DataFrame's executions, so the operator itself can never
-# unpersist it.  The session owner (bench loop, test fixture, a user's
+# fingerprints) or localCheckpoint() one register its release here: the
+# barrier must outlive the RETURNED lazy DataFrame's executions, so the
+# operator itself can never free it.  Whoever owns the results frees
+# them.  A one-time build wraps itself in barrier_scope(), which frees
+# exactly the barriers registered on its thread while it runs.  Outside
+# any scope the session owner (bench loop, test fixture, a user's
 # pipeline step) calls release_barriers() once the results are
 # materialized.  Un-released barriers degrade to LRU-evictable blocks —
 # never fatal, but they compete with shuffle/storage memory for the
-# life of the session (r3 advice).
+# life of the session.
+#
+# Built expression trees and table definitions wrap py4j objects of one
+# SparkContext; they live in session_expr_cache(), which starts empty
+# for every new context.
 
-_BARRIERS: list = []  # release callables
+_BARRIERS: list = []  # release callables registered outside any scope
+# the innermost open scope's release list; each thread has its own
+_SCOPE: ContextVar[list | None] = ContextVar("barrier_scope", default=None)
+
+
+def register_release(release) -> None:
+    """Register a release callable with the innermost barrier_scope()
+    open on this thread, else for the next release_barriers()."""
+    own = _SCOPE.get()
+    (_BARRIERS if own is None else own).append(release)
+
+
+@contextmanager
+def barrier_scope():
+    """Own the barriers registered on this thread inside the block:
+    on exit, release exactly those (newest first).  Scopes nest; an
+    inner scope's barriers never reach the outer one."""
+    own: list = []
+    token = _SCOPE.set(own)
+    try:
+        yield
+    finally:
+        _SCOPE.reset(token)
+        while own:
+            call_release(own.pop())
 
 
 def persist_barrier(df: DataFrame) -> DataFrame:
-    """persist() a barrier frame and register it for bulk release."""
+    """persist() a barrier frame and register its release."""
     df = df.persist()
-    _BARRIERS.append(df.unpersist)
+    register_release(df.unpersist)
     return df
 
 
-_EXPR_CACHE: dict = {}
+# (owning SparkContext, its cache).  The strong reference makes the
+# identity check exact: stop() unsets the active context and the next
+# session is a new object, whose id cannot be the stopped one's while
+# this tuple still holds that.
+_SESSION_CACHE: tuple = (None, {})
+_SESSION_LOCK = threading.Lock()  # the prebuild pool's threads look up at once
 
 
 def session_expr_cache() -> dict:
-    """Session-scoped memo for BUILT Column expression trees (r13).
+    """The one memo for objects bound to the active SparkContext:
+    built Column expression trees and loaded table definitions.
 
     Constructing a large literal/HOF Column costs py4j round-trips —
     seconds for the multi-fold trees (BPE merge pipeline, IVF cell
-    distances) — while a Column is an immutable UNRESOLVED expression
-    that is safe to reuse across queries; callers key on the literals
-    the tree embeds (plus input column names) and skip reconstruction.
-    Invalidates when the active SparkContext changes: cached Columns
-    wrap py4j JavaObjects, and entries built against a stopped context
-    would raise stale-object errors from a new session (same contract
-    as operators/similarity._pq_cache, which predates this shared
-    helper)."""
+    distances, PQ codebooks) — while a Column is an immutable
+    UNRESOLVED expression that is safe to reuse across queries.  Callers
+    key on a kind prefix plus the literals the tree embeds and the
+    input column names (``("sig_bits", ...)``, ``("table", sf_dir,
+    name)``).  A different active SparkContext gets a new, empty dict:
+    the entries wrap py4j JavaObjects, and ones built against a stopped
+    context would raise stale-object errors from a new session."""
     from pyspark import SparkContext
 
+    global _SESSION_CACHE
     sc = SparkContext._active_spark_context
-    # (applicationId, startTime) is unique per live context; id(sc)
-    # would be reusable after GC (ADVICE r4)
-    tag = (sc.applicationId, sc.startTime) if sc is not None else None
-    if _EXPR_CACHE.get("_tag") != tag:
-        _EXPR_CACHE.clear()
-        _EXPR_CACHE["_tag"] = tag
-    return _EXPR_CACHE
+    with _SESSION_LOCK:
+        owner, cache = _SESSION_CACHE
+        if owner is not sc:
+            cache = {}
+            _SESSION_CACHE = (sc, cache)
+    return cache
 
 
 def bounded_global_input(df: DataFrame, cap: int, what: str) -> DataFrame:
@@ -201,9 +238,9 @@ def multisets_equal(a: DataFrame, b: DataFrame) -> bool:
 def register_checkpoint_release(df: DataFrame) -> DataFrame:
     """Register a localCheckpoint()ed frame whose blocks back a
     RETURNED result (so the producing operator cannot free them) for
-    release through the checkpoint RDD handle at the next
-    release_barriers()."""
-    _BARRIERS.append(lambda: release_local_checkpoint(df))
+    release through the checkpoint RDD handle, like a persist
+    barrier."""
+    register_release(lambda: release_local_checkpoint(df))
     return df
 
 
@@ -233,7 +270,8 @@ def release_failures() -> int:
 
 
 def release_barriers() -> int:
-    """Release every registered barrier; returns how many.
+    """Release every barrier registered outside a barrier_scope();
+    returns how many.
 
     Timing contract, per barrier kind: PERSIST barriers (persist_
     barrier) are safe to release anytime — an unexecuted dependent

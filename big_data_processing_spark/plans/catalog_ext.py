@@ -396,9 +396,8 @@ _MH_CAP = 2
 
 _ARTIFACT_DIR: str | None = None
 _ARTIFACTS: dict[tuple[str, str], str] = {}
-_BUILDS_IN_FLIGHT = 0  # gates the inline barrier release (see below)
-# guards _ARTIFACT_DIR creation, _BUILDS_IN_FLIGHT and the sole-builder
-# barrier release — prebuild_artifacts runs builds from a thread pool
+# guards _ARTIFACT_DIR creation — prebuild_artifacts runs builds from a
+# thread pool
 _MEMO_LOCK = threading.Lock()
 
 
@@ -419,9 +418,9 @@ def _memo_artifact(
     import shutil
     import tempfile
 
-    from ..operators.util import timed_phase
+    from ..operators.util import barrier_scope, timed_phase
 
-    global _ARTIFACT_DIR, _BUILDS_IN_FLIGHT
+    global _ARTIFACT_DIR
     key = (os.path.abspath(sf_dir), name)
     path = _ARTIFACTS.get(key)
     if path is None or not os.path.isdir(path):
@@ -429,44 +428,21 @@ def _memo_artifact(
             if _ARTIFACT_DIR is None:
                 _ARTIFACT_DIR = tempfile.mkdtemp(prefix="spark_artifact_memo_")
                 atexit.register(shutil.rmtree, _ARTIFACT_DIR, ignore_errors=True)
-            _BUILDS_IN_FLIGHT += 1
-        from ..operators.util import _BARRIERS, call_release
-
-        try:
-            # mkdtemp makes every build's path unique, across threads and
-            # across rebuilds of a key whose dir was lost (ADVICE r7)
-            path = tempfile.mkdtemp(prefix=f"{name}_", dir=_ARTIFACT_DIR)
-            # recorded as one-time "setup" so bench.py can report the build
-            # separately from the steady-state serving time it amortizes
-            with timed_phase(f"artifact:{name}"):
-                n_barriers_before = len(_BARRIERS)
-                writer = build().write.mode("overwrite")
-                if partition_by is not None:
-                    writer = writer.partitionBy(partition_by)
-                writer.parquet(path)
-                # Barriers persisted INSIDE the build (e.g. the banded
-                # frame the pairs build shares across its branches) can
-                # never be reused once the artifact parquet exists — the
-                # memo returns spark.read.parquet — so release them now
-                # instead of leaving their blocks registered until the
-                # owner's next release_barriers() (ADVICE r13: in
-                # consumers that never drain barriers, like driver_sim,
-                # they occupied storage memory for the process lifetime).
-                # Only the build's OWN barriers are popped; callers' live
-                # barriers below the watermark are untouched.  Skipped
-                # when another build is in flight (the r14 overlapped
-                # prebuild): the global stack interleaves across threads
-                # there, and a concurrent build's live barrier must not
-                # be popped mid-build — the LAST build to finish (or the
-                # bench's between-entry release_barriers) frees the
-                # stragglers, which by then are all dead.
-                with _MEMO_LOCK:
-                    if _BUILDS_IN_FLIGHT == 1:
-                        while len(_BARRIERS) > n_barriers_before:
-                            call_release(_BARRIERS.pop())
-        finally:
-            with _MEMO_LOCK:
-                _BUILDS_IN_FLIGHT -= 1
+        # mkdtemp makes every build's path unique, across threads and
+        # across rebuilds of a key whose dir was lost (ADVICE r7)
+        path = tempfile.mkdtemp(prefix=f"{name}_", dir=_ARTIFACT_DIR)
+        # recorded as one-time "setup" so bench.py can report the build
+        # separately from the steady-state serving time it amortizes.
+        # Barriers persisted INSIDE the build (e.g. the banded frame the
+        # pairs build shares across its branches) are dead once the
+        # parquet exists — the memo returns spark.read.parquet — so the
+        # build's scope frees them at the write, whatever other builds
+        # run beside it.
+        with timed_phase(f"artifact:{name}"), barrier_scope():
+            writer = build().write.mode("overwrite")
+            if partition_by is not None:
+                writer = writer.partitionBy(partition_by)
+            writer.parquet(path)
         _ARTIFACTS[key] = path
     return spark.read.parquet(path)
 
@@ -1332,17 +1308,15 @@ def _parquet_sig(pq_path: str) -> int:
     """Content signature (file bytes via os.stat, no Spark job) for
     the derived-literal caches: prevents serving stale centroids/
     codebooks/merges when the dataset under the same path is
-    regenerated between rounds."""
+    regenerated between rounds.  Sums the files a scan reads
+    (readers.parquet_files), so suffix-less or nested part files sign
+    too."""
     import os
 
+    from ..sources.readers import parquet_files
+
     try:
-        if os.path.isdir(pq_path):
-            return sum(
-                os.path.getsize(os.path.join(pq_path, f))
-                for f in sorted(os.listdir(pq_path))
-                if f.endswith(".parquet")
-            )
-        return os.path.getsize(pq_path)
+        return sum(os.path.getsize(f) for f in parquet_files(pq_path))
     except OSError:
         return 0
 

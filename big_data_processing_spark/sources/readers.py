@@ -33,9 +33,6 @@ TESTDATA_TABLES = (
 )
 
 
-_TABLE_MEMO: dict = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table, normalizing types for engine use.
 
@@ -51,23 +48,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       functions (``unix_micros``, tz-aware comparisons) expect LTZ —
       matching how DuckDB treats the same column as plain TIMESTAMP.
 
-    The returned DataFrame is memoized per (SparkContext, sf_dir,
-    table) — r13: ``spark.read.parquet`` pays a driver-side listing +
-    footer schema read on EVERY call, and the catalog calls this
-    hundreds of times per bench run.  A DataFrame is an immutable
-    logical plan, so reuse is safe and plan-identical; every action
-    still scans the parquet (this caches the table DEFINITION, never
-    data).  Keyed on (applicationId, startTime) so a new session never
-    sees plans bound to a stopped context's JVM objects."""
-    from pyspark import SparkContext
+    The returned DataFrame is memoized per (sf_dir, table) in the
+    session cache (operators/util.session_expr_cache) — r13:
+    ``spark.read.parquet`` pays a driver-side listing + footer schema
+    read on EVERY call, and the catalog calls this hundreds of times
+    per bench run.  A DataFrame is an immutable logical plan, so reuse
+    is safe and plan-identical; every action still scans the parquet
+    (this caches the table DEFINITION, never data).  A new SparkContext
+    starts with an empty cache, so it never sees plans bound to a
+    stopped context's JVM objects."""
+    from ..operators.util import session_expr_cache
 
-    sc = SparkContext._active_spark_context
-    tag = (sc.applicationId, sc.startTime) if sc is not None else None
-    if _TABLE_MEMO.get("_tag") != tag:
-        _TABLE_MEMO.clear()
-        _TABLE_MEMO["_tag"] = tag
-    key = (sf_dir.rstrip("/"), name)
-    cached = _TABLE_MEMO.get(key)
+    key = ("table", sf_dir.rstrip("/"), name)
+    memo = session_expr_cache()
+    cached = memo.get(key)
     if cached is not None:
         return cached
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -77,7 +71,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for field in df.schema.fields:
         if isinstance(field.dataType, T.TimestampNTZType):
             df = df.withColumn(field.name, F.col(field.name).cast(T.TimestampType()))
-    _TABLE_MEMO[key] = df
+    memo[key] = df
     return df
 
 
@@ -91,41 +85,32 @@ def parquet_row_count(sf_dir: str, name: str) -> int:
     bloom entry's per-run ``keys.count()`` job existed only to size
     m).  On a manifest-backed table format (Iceberg/Delta) the same
     number is one manifest lookup; on a raw parquet directory it is
-    the listing the scan planner performs anyway.
-
-    A directory whose part files carry no ``.parquet`` suffix (some
-    writers omit it) falls back to every file Spark's scan would read:
-    all files under it except hidden/metadata ones (a path component
-    starting with ``_`` or ``.``, e.g. ``_SUCCESS`` or ``.crc``)."""
-    import glob as _glob
-
+    the listing the scan planner performs anyway.  The files are those
+    :func:`parquet_files` lists."""
     import pyarrow.parquet as _pq
 
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    if os.path.isfile(path):
-        files = [path]
-    else:
-        files = sorted(
-            _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        )
-        if not files:
-            for root, dirs, names in os.walk(path):
-                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-                files += [
-                    os.path.join(root, f)
-                    for f in names
-                    if not f.startswith(("_", "."))
-                ]
-            files.sort()
+    files = parquet_files(path)
     if not files:
         raise FileNotFoundError(f"no parquet files under {path}")
     return sum(_pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
-def _clear_table_memo() -> None:
-    """Test hook: forget memoized table definitions (e.g. after a
-    fixture rewrites a table path within one session)."""
-    _TABLE_MEMO.clear()
+def parquet_files(path: str) -> list[str]:
+    """The data files a parquet scan of ``path`` reads, sorted: the
+    path itself when it is a file, else every file under the directory
+    except hidden/metadata ones (a path component starting with ``_``
+    or ``.``, e.g. ``_SUCCESS`` or ``.crc``) — only the ``*.parquet``
+    ones when there are any, all of them when the writer gave its part
+    files no suffix.  Empty when nothing matches or the path does not
+    exist."""
+    if os.path.isfile(path):
+        return [path]
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        files += [os.path.join(root, f) for f in names if not f.startswith(("_", "."))]
+    return sorted([f for f in files if f.endswith(".parquet")] or files)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -72,8 +72,7 @@ def test_build_barriers_released_after_artifact_write(spark):
 
 def test_concurrent_builds_get_distinct_paths(spark):
     """prebuild_artifacts runs builds from a thread pool: concurrent
-    builds of the same name must land in distinct dirs, and the
-    in-flight counter must return to zero."""
+    builds of the same name must land in distinct dirs."""
     import os
     from concurrent.futures import ThreadPoolExecutor
 
@@ -89,7 +88,108 @@ def test_concurrent_builds_get_distinct_paths(spark):
     paths = [p for p, _ in results]
     assert len(set(paths)) == len(paths)
     assert [n for _, n in results] == [10 * (i + 1) for i in range(8)]
-    assert ce._BUILDS_IN_FLIGHT == 0
+
+
+def test_interleaved_builds_release_only_their_own_barriers(spark):
+    """N builds on threads, each persisting one barrier, with their
+    registrations and returns forced to interleave: build i starts and
+    registers only after build i-1 has registered, build 0 returns once
+    all N have registered, and build i>0 returns only after build i-1's
+    memo call has returned.  Every build's barrier must be freed when
+    that build finishes, and a caller's barrier registered outside any
+    build must stay live."""
+    import os
+    import threading
+
+    from big_data_processing_spark.operators import util
+
+    n = 4
+    registered = [threading.Event() for _ in range(n)]
+    returned = [threading.Event() for _ in range(n)]
+    barriers: list = [None] * n
+    build_ids: list = [set()] * n
+    results: list = [None] * n
+    errors: list = []
+
+    def persistent_ids() -> set[int]:
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jmap.keySet().toArray()}
+
+    def wait(event):
+        assert event.wait(timeout=120), "interleaving stalled"
+
+    def build_for(i):
+        def build():
+            before = persistent_ids()
+            df = util.persist_barrier(spark.range(10 * (i + 1)))
+            df.count()  # materialize: the barrier now holds an RDD
+            # no other build persists anything until registered[i] is set
+            build_ids[i] = persistent_ids() - before
+            barriers[i] = df
+            registered[i].set()
+            wait(registered[n - 1] if i == 0 else returned[i - 1])
+            return df
+
+        return build
+
+    def run(i):
+        try:
+            if i:
+                wait(registered[i - 1])
+            df = ce._memo_artifact(spark, f"sf_interleave_{i}", "interleave",
+                                   build_for(i))
+            results[i] = df.count()
+        except Exception as e:  # surfaced by the main thread
+            errors.append(e)
+        finally:
+            returned[i].set()
+
+    caller = util.persist_barrier(spark.range(5))
+    base = persistent_ids()
+    caller.count()
+    caller_ids = persistent_ids() - base
+    assert caller_ids
+
+    threads = [threading.Thread(target=run, args=(i,)) for i in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+        assert not t.is_alive()
+    assert not errors, errors
+
+    assert results == [10 * (i + 1) for i in range(n)]
+    for i in range(n):
+        path = ce._ARTIFACTS[(os.path.abspath(f"sf_interleave_{i}"), "interleave")]
+        assert spark.read.parquet(path).count() == 10 * (i + 1)
+    live = persistent_ids()
+    still = [i for i, df in enumerate(barriers) if df.unpersist in util._BARRIERS]
+    assert not still, f"build barriers still registered: {still}"
+    assert all(build_ids)
+    leaked = [i for i, ids in enumerate(build_ids) if ids & live]
+    assert not leaked, f"build barriers still persisted: {leaked}"
+    assert caller.unpersist in util._BARRIERS
+    assert caller_ids <= live, "the caller's barrier was released"
+
+
+def test_nested_barrier_scopes_release_only_their_own():
+    """A build that calls another memoized build (dedup_components ->
+    pairs) nests scopes: the inner scope frees only its own barriers at
+    its exit, the outer one its own at its exit, and a barrier
+    registered outside both waits for release_barriers()."""
+    from big_data_processing_spark.operators import util
+
+    freed: list = []
+    util.register_release(lambda: freed.append("caller"))
+    with util.barrier_scope():
+        util.register_release(lambda: freed.append("outer-1"))
+        with util.barrier_scope():
+            util.register_release(lambda: freed.append("inner"))
+        assert freed == ["inner"]
+        util.register_release(lambda: freed.append("outer-2"))
+    assert freed == ["inner", "outer-2", "outer-1"]
+    util.release_barriers()
+    assert freed[-1] == "caller"
 
 
 def test_timed_phase_keeps_every_update_under_threads(monkeypatch):
@@ -143,7 +243,7 @@ def test_failed_barrier_release_is_counted_and_logged(caplog):
     from big_data_processing_spark.operators import util
 
     before = util.release_failures()
-    util._BARRIERS.append(_broken_release)
+    util.register_release(_broken_release)
     with caplog.at_level(logging.WARNING, logger=util.__name__):
         util.release_barriers()
     assert util.release_failures() == before + 1
@@ -157,7 +257,7 @@ def test_failed_build_barrier_release_is_counted(spark):
     from big_data_processing_spark.operators import util
 
     def build():
-        util._BARRIERS.append(_broken_release)
+        util.register_release(_broken_release)
         return spark.range(3)
 
     before = util.release_failures()

@@ -567,3 +567,64 @@ def test_parquet_row_count_matches_scan(spark, tmp_path):
         assert parquet_row_count(sf_dir, "orders") == load_table(
             spark, sf_dir, "orders"
         ).count()
+
+
+def test_parquet_sig_signs_every_file_a_scan_reads(sf_dir, tmp_path):
+    """The literal-cache signature must see suffix-less part files (the
+    layout above) and change when one grows, while a single file and a
+    flat directory of *.parquet parts keep the signature they always
+    had (existing .cache keys still hit)."""
+    import os
+    import shutil
+
+    from big_data_processing_spark.plans.catalog_ext import _parquet_sig
+
+    src = f"{sf_dir}/orders.parquet"
+    size = os.path.getsize(src)
+    unsuffixed = tmp_path / "unsuffixed.parquet"
+    unsuffixed.mkdir()
+    for part in ("part-00000", "part-00001"):
+        shutil.copyfile(src, unsuffixed / part)
+    (unsuffixed / "_SUCCESS").write_text("")
+    (unsuffixed / ".part-00002.crc").write_text("x")
+    assert _parquet_sig(str(unsuffixed)) == 2 * size
+    with open(unsuffixed / "part-00001", "ab") as f:
+        f.write(b"\0" * 7)
+    assert _parquet_sig(str(unsuffixed)) == 2 * size + 7
+
+    flat = tmp_path / "flat.parquet"
+    flat.mkdir()
+    for part in ("part-0.parquet", "part-1.parquet"):
+        shutil.copyfile(src, flat / part)
+    (flat / "_SUCCESS").write_text("x")
+    (flat / "_temporary").mkdir()  # an aborted write's leftovers
+    shutil.copyfile(src, flat / "_temporary" / "part-2.parquet")
+    assert _parquet_sig(str(flat)) == 2 * size
+    assert _parquet_sig(src) == size
+    assert _parquet_sig(str(tmp_path / "missing.parquet")) == 0
+
+
+def test_session_cache_follows_the_active_context(spark, sf_dir, monkeypatch):
+    """load_table memoizes per SparkContext: a repeat call is a hit, a
+    different active context starts from an empty cache, and going back
+    to the real context never serves the other context's entries."""
+    from pyspark import SparkContext
+
+    from big_data_processing_spark.operators.util import session_expr_cache
+    from big_data_processing_spark.sources.readers import load_table
+
+    real = SparkContext._active_spark_context
+    first = load_table(spark, sf_dir, "region")
+    assert load_table(spark, sf_dir, "region") is first
+    assert session_expr_cache()
+
+    monkeypatch.setattr(SparkContext, "_active_spark_context", object())
+    assert session_expr_cache() == {}
+    stand_in = load_table(spark, sf_dir, "region")
+    assert stand_in is not first
+    assert load_table(spark, sf_dir, "region") is stand_in
+
+    monkeypatch.setattr(SparkContext, "_active_spark_context", real)
+    again = load_table(spark, sf_dir, "region")
+    assert again is not stand_in and again is not first
+    assert again.count() == first.count()
