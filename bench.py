@@ -180,7 +180,7 @@ def main() -> None:
     spread_worst: dict[str, float] = {}
     # setup/query split for setup-dominated entries (judge r5 item 6,
     # widened r7): an entry's timed_phase blocks AND any shared-artifact
-    # builds it triggers (plans/catalog_ext._memo_artifact — dedup
+    # builds it triggers (plans/artifacts.build_once — dedup
     # pairs/components, serving rollups) drain as "setup".  Per-run
     # setup (txnlog table builds) splits the BEST run; one-time setup
     # (artifact memo, paid only in the first run) is reported beside the

@@ -82,7 +82,6 @@ def evaluate(model: PipelineModel, test: DataFrame) -> dict[str, float]:
 def model_performance_row(
     spark: SparkSession,
     model: PipelineModel,
-    train: DataFrame,
     test: DataFrame,
     model_name: str = "LinearRegression_ET_Prediction",
 ) -> DataFrame:
@@ -90,13 +89,15 @@ def model_performance_row(
     contract (train_et_model.py:72-90 table DDL, :120-140 insert):
     sizes, RMSE/R²/MAE, feature names, per-feature coefficients, and
     intercept. Coefficients come from the fitted LR stage (in scaled
-    feature space, matching the reference which also scales first)."""
+    feature space, matching the reference which also scales first);
+    the training-set size is the row count the fit already recorded,
+    so no job recounts the training split."""
     metrics = evaluate(model, test)
     lr = model.stages[-1]
     coefs = [float(c) for c in lr.coefficients]
     row = (
         model_name,
-        train.count(),
+        lr.summary.numInstances,
         test.count(),
         metrics["rmse"],
         metrics["r2"],

@@ -10,8 +10,6 @@ SQL is a true semantic twin, not a hand-kept copy.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -78,6 +76,7 @@ from ..operators.textstats import (
     quality_features,
 )
 from ..operators.util import run_concurrently, spread
+from .artifacts import _memo_artifact, build_once
 from .catalog import _t, query
 
 _TOKENS = "regexp_split_to_array(lower(text), '\\s+')"
@@ -374,79 +373,6 @@ def _minhash_oracle(max_bucket: int | None = None) -> str:
 _MH_CAP = 2
 
 
-# ---------------------------------------------------------------------------
-# Shared pipeline artifacts (judge r6 'What's wrong' #4; generic since —
-# also hosts the serving rollup and the exact-kNN ground truth).
-#
-# The dedup family forms a pipeline — near-dup PAIRS feed the component
-# fixpoint, components feed cluster accounting AND canonical selection —
-# but every catalog entry must be runnable standalone, so before r7 each
-# entry recomputed the full MinHash banding + connected-components walk
-# (the two most expensive stages) from scratch.  A real 100 TB curation
-# run materializes those artifacts ONCE and reads them downstream; this
-# memo does exactly that at process scope: first use writes the artifact
-# to a process-private parquet dir, later entries (any order) re-read it.
-#
-# Parquet (not .persist/.localCheckpoint) deliberately: bench.py calls
-# release_barriers() between entries, which frees cached/checkpointed
-# blocks — a file survives, costs one distributed write, and round-trips
-# doubles bit-exactly, so entry hashes are unchanged.  No driver-side
-# collect: the artifacts never leave the executors.
-# ---------------------------------------------------------------------------
-
-_ARTIFACT_DIR: str | None = None
-_ARTIFACTS: dict[tuple[str, str], str] = {}
-# guards _ARTIFACT_DIR creation — prebuild_artifacts runs builds from a
-# thread pool
-_MEMO_LOCK = threading.Lock()
-
-
-def _memo_artifact(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    build,
-    partition_by: str | None = None,
-) -> DataFrame:
-    """Materialize ``build()`` once per (sf_dir, name) per process.
-
-    ``partition_by`` writes the artifact as a hive-partitioned layout
-    (the dpp entry's year-partitioned fact fixture) — same memo keying,
-    cleanup, and one-time bench accounting as flat artifacts."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from ..operators.util import barrier_scope, timed_phase
-
-    global _ARTIFACT_DIR
-    key = (os.path.abspath(sf_dir), name)
-    path = _ARTIFACTS.get(key)
-    if path is None or not os.path.isdir(path):
-        with _MEMO_LOCK:
-            if _ARTIFACT_DIR is None:
-                _ARTIFACT_DIR = tempfile.mkdtemp(prefix="spark_artifact_memo_")
-                atexit.register(shutil.rmtree, _ARTIFACT_DIR, ignore_errors=True)
-        # mkdtemp makes every build's path unique, across threads and
-        # across rebuilds of a key whose dir was lost (ADVICE r7)
-        path = tempfile.mkdtemp(prefix=f"{name}_", dir=_ARTIFACT_DIR)
-        # recorded as one-time "setup" so bench.py can report the build
-        # separately from the steady-state serving time it amortizes.
-        # Barriers persisted INSIDE the build (e.g. the banded frame the
-        # pairs build shares across its branches) are dead once the
-        # parquet exists — the memo returns spark.read.parquet — so the
-        # build's scope frees them at the write, whatever other builds
-        # run beside it.
-        with timed_phase(f"artifact:{name}"), barrier_scope():
-            writer = build().write.mode("overwrite")
-            if partition_by is not None:
-                writer = writer.partitionBy(partition_by)
-            writer.parquet(path)
-        _ARTIFACTS[key] = path
-    return spark.read.parquet(path)
-
-
 def prebuild_artifacts(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     """Warm every known one-time artifact / table fixture, overlapping
     the INDEPENDENT builds from a small driver thread pool (guide §2.6:
@@ -458,15 +384,14 @@ def prebuild_artifacts(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     cost lands in ONE measured wall-clock block
     (setup.artifacts_one_time) instead of serially inflating whichever
     entries happen to run first; every build still computes from the
-    parquet inputs in-process (the r7 artifact-memo contract — nothing
-    here caches results across runs or processes).  Lazy building
-    stays in place for every other consumer (driver_sim, tests,
-    subset-mode bench runs) and for any artifact not listed here.
+    parquet inputs in-process (plans/artifacts — nothing here caches
+    results across runs or processes).  Lazy building stays in place
+    for every other consumer (driver_sim, tests, subset-mode bench
+    runs) and for any artifact not listed here.
 
-    Structure: the two shared memo ROOTS both txn chains read
-    (base_rollup, orders_fact_base) build serially first — two pool
-    tasks racing the same memo key would build it twice.  Then the
-    independent chains overlap.  The cc_star contraction runs LAST and
+    Tasks that share a root (the txn chains all read base_rollup or
+    orders_fact_base) build it once: artifacts.build_once makes the
+    other requesters wait.  The cc_star contraction runs LAST and
     ALONE: its fixpoint loop micro-tunes session confs for the loop's
     duration (graph.py's documented single-query assumption), and a
     build planned concurrently would silently inherit AQE-off and the
@@ -474,49 +399,31 @@ def prebuild_artifacts(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     import time as _time
     from functools import partial
 
-    from . import txnfix
+    # catalog_scale imports from this module: bind it lazily to keep
+    # the import DAG acyclic
+    from . import catalog_scale, txnfix
 
-    txnfix.base_rollup(spark, sf_dir)
-    txnfix.orders_fact_base(spark, sf_dir)
-
-    def _scale_task(name: str):
-        # catalog_scale imports from this module; bind its producers
-        # lazily to keep the import DAG acyclic
-        from . import catalog_scale
-
-        return {
-            "nation_monthly_rollup": catalog_scale._nation_monthly_rollup,
-            "orders_partitioned": catalog_scale._orders_partitioned,
-            "bucketed_tables": catalog_scale._bucketed_tables,
-        }[name]
-
-    tasks: dict = {
+    tasks = {
         # chained internally: pairs artifact resolves before components
-        "dedup_components": lambda: _dedup_components(spark, sf_dir),
-        # chained internally: base rollup (warm) -> create2 -> cdf history
-        "txn_cdf_history": lambda: txnfix.cdf_history_fixture(spark, sf_dir),
-        "txn_fragmented": lambda: txnfix.fragmented_fixture(spark, sf_dir),
-        "txn_partitioned": lambda: txnfix.partitioned_fixture(spark, sf_dir),
-        "txn_evolution": lambda: txnfix.evolution_fixture(spark, sf_dir),
-        "txn_docs_cdf": lambda: txnfix.docs_cdf_fixture(spark, sf_dir),
-        "knn_exact_topk": lambda: _knn_exact_baseline(spark, sf_dir),
-        "ivf_refresh_merged": lambda: _ivf_refresh_fixture(spark, sf_dir),
-        "nation_monthly_rollup": lambda: _scale_task("nation_monthly_rollup")(
-            spark, sf_dir
-        ),
-        "orders_partitioned": lambda: _scale_task("orders_partitioned")(
-            spark, sf_dir
-        ),
-        "bucketed_tables": lambda: _scale_task("bucketed_tables")(
-            spark, sf_dir
-        ),
+        "dedup_components": _dedup_components,
+        # chained internally: base rollup -> create2 -> cdf history
+        "txn_cdf_history": txnfix.cdf_history_fixture,
+        "txn_fragmented": txnfix.fragmented_fixture,
+        "txn_partitioned": txnfix.partitioned_fixture,
+        "txn_evolution": txnfix.evolution_fixture,
+        "txn_docs_cdf": txnfix.docs_cdf_fixture,
+        "knn_exact_topk": _knn_exact_baseline,
+        "ivf_refresh_merged": _ivf_refresh_fixture,
+        "nation_monthly_rollup": catalog_scale._nation_monthly_rollup,
+        "orders_partitioned": catalog_scale._orders_partitioned,
+        "bucketed_tables": catalog_scale._bucketed_tables,
     }
 
     walls: dict[str, float] = {}
 
     def _run(name: str):
         t0 = _time.perf_counter()
-        tasks[name]()
+        tasks[name](spark, sf_dir)
         walls[name] = round(_time.perf_counter() - t0, 3)
 
     # 4 in flight: enough to fill stage tails, not enough to thrash
@@ -1675,7 +1582,6 @@ def _ivf_refresh_fixture(spark: SparkSession, sf_dir: str) -> str:
     reads (r13).  Extracted from the arm fn (r14) so the prebuild phase
     can warm it without running the report."""
     from ..sources.txnlog import txn_create, txn_merge
-    from .txnfix import table_fixture
 
     emb = _t(spark, sf_dir, "embeddings")
 
@@ -1690,7 +1596,7 @@ def _ivf_refresh_fixture(spark: SparkSession, sf_dir: str) -> str:
             key_cols=["vec_id"],
         )
 
-    return table_fixture(spark, sf_dir, "ivf_refresh_merged", build)
+    return build_once(sf_dir, "ivf_refresh_merged", build)
 
 
 def _knn_ivf_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1714,8 +1620,8 @@ def _knn_ivf_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r13: the report's query phase is READ-ONLY over the merged table,
     so the create+MERGE history builds ONCE per (sf_dir) process as a
-    txnfix table fixture (shape ``ivf_refresh_merged``, charged to
-    artifacts_one_time) and every invocation reads its snapshot —
+    table fixture (``build_once`` shape ``ivf_refresh_merged``, charged
+    to artifacts_one_time) and every invocation reads its snapshot —
     the CDF-pair sharing pattern; the certified surface (assignment
     off the merge-produced snapshot) is unchanged, the per-run table
     churn is gone.

@@ -25,6 +25,7 @@ from ..functions.aggregates import dsum, dsum_sql, dsum_sql_spark
 from ..operators.heavyhitters import heavy_hitters_topk
 from ..operators.timeseries import gap_fill_ffill, scd2_intervals
 from ..operators.util import multisets_equal, timed_phase
+from . import artifacts
 from .catalog import _t, query
 from .catalog_ext import _TOKENS  # the shared DuckDB tokenizer expression
 
@@ -222,23 +223,12 @@ def heavy_hitters_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 # One bucketed-table build per (SparkSession, sf_dir) — repeated bench
 # runs and the driver's double materialization reuse the layout,
 # mirroring production where the bucketed write is a one-time cost.
-# The data lives at a per-PROCESS tmp path (concurrent processes never
-# race on each other's files) removed at interpreter exit, and the
-# cache is re-validated against the session catalog because
-# saveAsTable registrations die with the SparkSession.
+# The data lives under the process-private artifact root (concurrent
+# processes never race on each other's files), and the cache is
+# re-validated against the session catalog because saveAsTable
+# registrations die with the SparkSession — a rule the artifact
+# store's directory check cannot see.
 _BUCKETED: dict[str, tuple[str, str]] = {}
-
-
-def _bucketed_base() -> str:
-    import atexit
-
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_bucketed_{os.getpid()}"
-    )
-    if not os.path.isdir(base):
-        os.makedirs(base, exist_ok=True)
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
-    return base
 
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -257,7 +247,6 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     # item 5); the query timing now measures the steady-state
     # shuffle-free join the entry exists to certify.
     with timed_phase("artifact:bucketed_tables"):
-        base = _bucketed_base()
         # Layout sized to its consumer (guide §6, r13): the join entry
         # reads exactly (key, one measure/dim) per side, so the layout
         # carries only those columns — at 100 TB you bucket the full
@@ -274,7 +263,7 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             ("lineitem", lt, "l_orderkey", ["l_orderkey", "l_extendedprice"]),
         ):
             spark.sql(f"DROP TABLE IF EXISTS {table}")
-            path = f"{base}/{table}"
+            path = os.path.join(artifacts.root(), table)
             if os.path.isdir(path):
                 shutil.rmtree(path)
             (
@@ -827,7 +816,6 @@ def _nation_monthly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver collect); at 100 TB this is the nightly-maintained rollup
     (or the A12 incremental MV) and serving queries never touch
     lineitem."""
-    from .catalog_ext import _memo_artifact
 
     def build() -> DataFrame:
         li = _t(spark, sf_dir, "lineitem")
@@ -849,7 +837,9 @@ def _nation_monthly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum(rev).alias("rev"), F.count(F.lit(1)).alias("n_items"))
         )
 
-    return _memo_artifact(spark, sf_dir, "nation_monthly_rollup", build)
+    return artifacts._memo_artifact(
+        spark, sf_dir, "nation_monthly_rollup", build
+    )
 
 
 @query(
@@ -1105,22 +1095,22 @@ def bloom_pruned_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Partitioned-layout fixture for the dynamic-partition-pruning entry:
 # orders rewritten once per (sf_dir, process) as a year-partitioned
 # parquet table — the layout every 100 TB fact table ships with.
-# Rides the shared artifact memo (one-time bench accounting, temp-dir
-# lifecycle, rebuild-collision handling all inherited) via its
-# partition_by extension.
+# Built through the shared artifact store (one-time bench accounting,
+# temp-dir lifecycle and rebuild handling all inherited).
 
 
 def _orders_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog_ext import _memo_artifact
-
-    def build() -> DataFrame:
-        return _t(spark, sf_dir, "orders").withColumn(
-            "o_year", F.year("o_orderdate").cast("int")
+    def build(path: str) -> None:
+        (
+            _t(spark, sf_dir, "orders")
+            .withColumn("o_year", F.year("o_orderdate").cast("int"))
+            .write.mode("overwrite")
+            .partitionBy("o_year")
+            .parquet(path)
         )
 
-    return _memo_artifact(
-        spark, sf_dir, "orders_partitioned", build, partition_by="o_year"
-    )
+    path = artifacts.build_once(sf_dir, "orders_partitioned", build)
+    return spark.read.parquet(path)
 
 
 @query(

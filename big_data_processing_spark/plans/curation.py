@@ -23,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.util import barrier_scope, persist_barrier
 from ..sources.readers import load_table
 from .catalog_ext import curation_labels, split_assignment
 
@@ -30,35 +31,38 @@ from .catalog_ext import curation_labels, split_assignment
 def run_curation_pipeline(
     spark: SparkSession, sf_dir: str, out_dir: str
 ) -> dict[str, str]:
-    """Run the funnel and write the curated corpus; returns output paths."""
-    # persist: the labels lineage (quality scoring + digest groupBy +
-    # decontamination broadcast join) feeds BOTH writes below — without
-    # this it would execute twice per pipeline run
-    labels = curation_labels(spark, sf_dir).persist()
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "source", "n_chars"
-    )
+    """Run the funnel and write the curated corpus; returns output paths.
 
+    Everything it persists (the labels below and the barriers
+    curation_labels registers) is released on return, whether the
+    writes succeed or raise."""
     curated_path = os.path.join(out_dir, "curated_documents")
     report_path = os.path.join(out_dir, "curation_report")
-
-    kept = (
-        labels.filter(F.col("status") == "kept")
-        .join(docs, "doc_id")
-        .withColumn("split", split_assignment())
-        .select(
-            "doc_id", "text", "lang", "source", "n_chars", "quality_score", "split"
+    with barrier_scope():
+        # persist: the labels lineage (quality scoring + digest groupBy +
+        # decontamination broadcast join) feeds BOTH writes below —
+        # without this it would execute twice per pipeline run
+        labels = persist_barrier(curation_labels(spark, sf_dir))
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id", "text", "source", "n_chars"
         )
-    )
-    kept.write.mode("overwrite").partitionBy("split").parquet(curated_path)
+        kept = (
+            labels.filter(F.col("status") == "kept")
+            .join(docs, "doc_id")
+            .withColumn("split", split_assignment())
+            .select(
+                "doc_id", "text", "lang", "source", "n_chars", "quality_score",
+                "split",
+            )
+        )
+        kept.write.mode("overwrite").partitionBy("split").parquet(curated_path)
 
-    report = (
-        labels.groupBy("lang", "status")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("lang", "status")
-    )
-    report.write.mode("overwrite").parquet(report_path)
-    labels.unpersist()
+        report = (
+            labels.groupBy("lang", "status")
+            .agg(F.count(F.lit(1)).alias("n_docs"))
+            .orderBy("lang", "status")
+        )
+        report.write.mode("overwrite").parquet(report_path)
 
     return {"curated_documents": curated_path, "curation_report": report_path}
 

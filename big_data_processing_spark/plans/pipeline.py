@@ -94,12 +94,12 @@ def _ml_branch(spark: SparkSession, weather, paths: dict[str, str]) -> None:
     and written."""
     from ..ml import pipeline as ML
 
-    model, train, test = ML.train_et_model(weather)
+    model, _, test = ML.train_et_model(weather)
     run_concurrently(
         spark,
         lambda: ML.save_model(model, paths["et_model"]),
         lambda: write_table(
-            ML.model_performance_row(spark, model, train, test),
+            ML.model_performance_row(spark, model, test),
             paths["ml_model_performance"],
         ),
     )

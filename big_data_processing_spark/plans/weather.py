@@ -88,13 +88,18 @@ ROUND2_SQL = "(FLOOR(CAST(({x}) AS DOUBLE) * 100 + 0.5) / 100)"
 
 
 def ingest_weather_csv(spark: SparkSession, path: str) -> DataFrame:
-    """CSV → typed fact with a real DateType column.
+    """CSV → typed fact with a real DateType column."""
+    return clean_weather(read_csv_table(spark, path, WEATHER_SCHEMA))
+
+
+def clean_weather(raw: DataFrame) -> DataFrame:
+    """Raw weather rows (WEATHER_SCHEMA) → the typed fact: the one
+    cleaning rule the batch ingest and the streaming ingest share.
 
     Replaces the reference's repeated from_unixtime(unix_timestamp(...))
     idiom (weather_spark_analysis_new.py:282-285) with one to_date at
     ingest; malformed dates (P6: RLIKE '^[0-9]+/[0-9]+/[0-9]+$') and
     unparsable measure rows (P10) are dropped here, once."""
-    raw = read_csv_table(spark, path, WEATHER_SCHEMA)
     return (
         raw.filter(F.col("date").rlike(r"^[0-9]+/[0-9]+/[0-9]+$"))
         # try_to_date: ANSI-safe null on unparsable dates — the Spark

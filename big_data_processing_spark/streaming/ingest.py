@@ -35,20 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.util import run_concurrently
-from ..plans.weather import WEATHER_SCHEMA
-
-
-def _typed_weather(raw: DataFrame) -> DataFrame:
-    """Same cleaning as batch ingest (plans.weather.ingest_weather_csv):
-    regex date filter, ANSI-safe parse, null drops, date parts."""
-    return (
-        raw.filter(F.col("date").rlike(r"^[0-9]+/[0-9]+/[0-9]+$"))
-        .withColumn("obs_date", F.try_to_date("date", "M/d/yyyy"))
-        .filter(F.col("obs_date").isNotNull() & F.col("location_id").isNotNull())
-        .withColumn("year", F.year("obs_date"))
-        .withColumn("month", F.month("obs_date"))
-        .withColumn("week", F.weekofyear("obs_date"))
-    )
+from ..plans.weather import WEATHER_SCHEMA, clean_weather
 
 
 def make_ingest_sink(fact_dir: str, derived_dir: str | None = None):
@@ -129,7 +116,7 @@ def stream_ingest_weather(
         .schema(WEATHER_SCHEMA)
         .csv(in_dir)
     )
-    typed = _typed_weather(raw)
+    typed = clean_weather(raw)
     writer = (
         typed.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)

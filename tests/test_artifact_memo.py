@@ -1,15 +1,20 @@
-"""The shared dedup artifact memo (plans/catalog_ext._memo_artifact)
-must key by scale dir — one process routinely serves multiple sf dirs
-(this very pytest suite runs sf0.001 fixtures while ad-hoc checks hit
-sf0.01), and a cross-contaminated memo would hand one scale's pair
+"""The one-time build store (plans/artifacts): every process-scoped
+build-once artifact goes through it.
+
+It must key by scale dir — one process routinely serves multiple sf
+dirs (this very pytest suite runs sf0.001 fixtures while ad-hoc checks
+hit sf0.01), and a cross-contaminated memo would hand one scale's pair
 list to another scale's entry: wrong results that LOOK plausible.
-Also pins that a memo hit returns the same rows as a fresh build.
+Also pins that a memo hit returns the same rows as a fresh build, that
+concurrent requests of one key build it once, and that no module
+outside the store keeps its own temp root.
 """
 
 from __future__ import annotations
 
 import pytest
 
+from big_data_processing_spark.plans import artifacts as art
 from big_data_processing_spark.plans import catalog_ext as ce
 
 SF_A = "/root/testdata/sf0.001"
@@ -18,11 +23,11 @@ SF_B = "/root/testdata/sf0.01"
 
 @pytest.fixture(autouse=True)
 def _fresh_memo():
-    saved = dict(ce._ARTIFACTS)
-    ce._ARTIFACTS.clear()
+    saved = dict(art._ARTIFACTS)
+    art._ARTIFACTS.clear()
     yield
-    ce._ARTIFACTS.clear()
-    ce._ARTIFACTS.update(saved)
+    art._ARTIFACTS.clear()
+    art._ARTIFACTS.update(saved)
 
 
 def test_memo_keys_by_sf_dir(spark):
@@ -31,7 +36,7 @@ def test_memo_keys_by_sf_dir(spark):
     pa = {(r.id_a, r.id_b) for r in a.collect()}
     pb = {(r.id_a, r.id_b) for r in b.collect()}
     # distinct artifacts on disk, not one frame served twice
-    assert ce._ARTIFACTS[(SF_A, "minhash_pairs_default")] != ce._ARTIFACTS[
+    assert art._ARTIFACTS[(SF_A, "minhash_pairs_default")] != art._ARTIFACTS[
         (SF_B, "minhash_pairs_default")
     ]
     assert pa != pb  # different corpora -> different pair sets
@@ -41,22 +46,83 @@ def test_memo_hit_matches_fresh_build(spark):
     first = {(r.id_a, r.id_b, r.jaccard) for r in
              ce._dedup_pairs_default(spark, SF_A).collect()}
     # second call must be a memo hit...
-    path = ce._ARTIFACTS[(SF_A, "minhash_pairs_default")]
+    path = art._ARTIFACTS[(SF_A, "minhash_pairs_default")]
     again = {(r.id_a, r.id_b, r.jaccard) for r in
              ce._dedup_pairs_default(spark, SF_A).collect()}
-    assert ce._ARTIFACTS[(SF_A, "minhash_pairs_default")] == path
+    assert art._ARTIFACTS[(SF_A, "minhash_pairs_default")] == path
     assert again == first
     # ...and a forced fresh build produces the identical pair set
     # (doubles included: the parquet round-trip is bit-exact)
-    ce._ARTIFACTS.clear()
+    art._ARTIFACTS.clear()
     fresh = {(r.id_a, r.id_b, r.jaccard) for r in
              ce._dedup_pairs_default(spark, SF_A).collect()}
     assert fresh == first
 
 
+def test_concurrent_requests_build_once():
+    """prebuild_artifacts' pool threads request shared roots at once
+    (every txn chain starts from base_rollup): the first request of a
+    key builds it, the rest wait, and all of them get its path."""
+    import os
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    n = 6
+    built: list[str] = []
+    start = threading.Barrier(n)
+
+    def build(path):
+        built.append(path)
+        time.sleep(0.5)  # every other request arrives mid-build
+        open(os.path.join(path, "part"), "w").close()
+
+    def request(_):
+        start.wait(timeout=60)
+        return art.build_once("sf_once", "once", build)
+
+    with ThreadPoolExecutor(max_workers=n) as pool:
+        paths = list(pool.map(request, range(n), timeout=120))
+    assert len(built) == 1, f"{len(built)} builds of one key"
+    assert paths == built * n
+
+
+def test_txn_fixture_and_frame_artifact_share_one_root(spark, sf_dir):
+    """A txnlog table fixture and the parquet frame it is built from
+    live under the one process root."""
+    import os
+
+    from big_data_processing_spark.plans import txnfix
+
+    table = txnfix.create_fixture(spark, sf_dir)
+    frame = art._ARTIFACTS[(os.path.abspath(sf_dir), "txn_base_rollup")]
+    assert os.path.dirname(table) == os.path.dirname(frame) == art.root()
+    assert os.path.basename(table).startswith("txn_create2_")
+
+
+def test_only_the_store_keeps_a_process_temp_root():
+    """A module with its own mkdtemp / gettempdir root and atexit
+    cleanup is a hand-copied build-once store with its own validity
+    rule.  Scoped TemporaryDirectory() uses stay allowed."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(art.__file__).resolve().parents[1]
+    store = pathlib.Path(art.__file__).resolve()
+    word = re.compile(r"\b(mkdtemp|gettempdir|atexit)\b")
+    offenders = [
+        f"{path.relative_to(pkg)}:{i}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.resolve() != store
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if word.search(line)
+    ]
+    assert not offenders, f"temp roots outside plans/artifacts.py: {offenders}"
+
+
 def test_build_barriers_released_after_artifact_write(spark):
     """ADVICE r13: barriers persisted INSIDE a one-time build can never
-    be reused once the artifact parquet exists, so _memo_artifact must
+    be reused once the artifact parquet exists, so the store must
     release them at the write instead of deferring to the owner's next
     release_barriers() (driver_sim never drains)."""
     from big_data_processing_spark.operators.util import _BARRIERS
@@ -80,8 +146,8 @@ def test_concurrent_builds_get_distinct_paths(spark):
         return lambda: spark.range(10 * (i + 1))
 
     def run(i):
-        df = ce._memo_artifact(spark, f"sf_stress_{i}", "stress", build_for(i))
-        return ce._ARTIFACTS[(os.path.abspath(f"sf_stress_{i}"), "stress")], df.count()
+        df = art._memo_artifact(spark, f"sf_stress_{i}", "stress", build_for(i))
+        return art._ARTIFACTS[(os.path.abspath(f"sf_stress_{i}"), "stress")], df.count()
 
     with ThreadPoolExecutor(max_workers=8) as pool:
         results = [f.result(timeout=300) for f in [pool.submit(run, i) for i in range(8)]]
@@ -136,7 +202,7 @@ def test_interleaved_builds_release_only_their_own_barriers(spark):
         try:
             if i:
                 wait(registered[i - 1])
-            df = ce._memo_artifact(spark, f"sf_interleave_{i}", "interleave",
+            df = art._memo_artifact(spark, f"sf_interleave_{i}", "interleave",
                                    build_for(i))
             results[i] = df.count()
         except Exception as e:  # surfaced by the main thread
@@ -160,7 +226,7 @@ def test_interleaved_builds_release_only_their_own_barriers(spark):
 
     assert results == [10 * (i + 1) for i in range(n)]
     for i in range(n):
-        path = ce._ARTIFACTS[(os.path.abspath(f"sf_interleave_{i}"), "interleave")]
+        path = art._ARTIFACTS[(os.path.abspath(f"sf_interleave_{i}"), "interleave")]
         assert spark.read.parquet(path).count() == 10 * (i + 1)
     live = persistent_ids()
     still = [i for i, df in enumerate(barriers) if df.unpersist in util._BARRIERS]
@@ -261,5 +327,5 @@ def test_failed_build_barrier_release_is_counted(spark):
         return spark.range(3)
 
     before = util.release_failures()
-    assert ce._memo_artifact(spark, "sf_release_fail", "broken", build).count() == 3
+    assert art._memo_artifact(spark, "sf_release_fail", "broken", build).count() == 3
     assert util.release_failures() == before + 1

@@ -284,3 +284,41 @@ def test_curation_pipeline_materializes_consistent_corpus(spark, sf_dir, tmp_pat
     assert train.count() > 0
     # quality gate actually held
     assert curated.agg(F.min("quality_score")).first()[0] >= 0.45
+
+
+@pytest.mark.parametrize("report_write_fails", [False, True])
+def test_curation_pipeline_frees_what_it_persisted(
+    spark, sf_dir, tmp_path, monkeypatch, report_write_fails
+):
+    """Right after the run — finished or failed on its second write —
+    no RDD it persisted is still cached and no barrier of its waits
+    for release_barriers()."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from big_data_processing_spark.operators import util
+    from big_data_processing_spark.plans.curation import run_curation_pipeline
+
+    def persisted() -> set[int]:
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jmap.keySet().toArray()}
+
+    if report_write_fails:
+        parquet = DataFrameWriter.parquet
+
+        def failing_parquet(self, path, *args, **kwargs):
+            if path.endswith("curation_report"):
+                raise OSError("report sink unavailable")
+            return parquet(self, path, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+
+    before = persisted()
+    n_barriers = len(util._BARRIERS)
+    if report_write_fails:
+        with pytest.raises(OSError, match="report sink"):
+            run_curation_pipeline(spark, sf_dir, str(tmp_path / "out"))
+    else:
+        run_curation_pipeline(spark, sf_dir, str(tmp_path / "out"))
+    leaked = persisted() - before
+    assert not leaked, f"{len(leaked)} RDD(s) still persisted after the run"
+    assert len(util._BARRIERS) == n_barriers

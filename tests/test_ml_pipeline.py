@@ -42,6 +42,15 @@ def test_metrics_sane(trained):
     assert 0.0 < metrics["mae"] <= metrics["rmse"], metrics
 
 
+def test_performance_row_train_size_is_the_training_split(trained, spark):
+    """train_size comes from the fit's own summary, not a recount: it
+    must still equal the training split's row count."""
+    model, train, test = trained
+    row = M.model_performance_row(spark, model, test).first()
+    assert row.train_size == train.count()
+    assert row.test_size == test.count()
+
+
 def test_model_persistence_roundtrip(trained, spark, tmp_path):
     model, _, test = trained
     path = str(tmp_path / "et_model")

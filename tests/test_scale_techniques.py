@@ -488,29 +488,31 @@ def test_dpp_entry_certificate_is_live(spark, sf_dir):
         spark.conf.set(key, saved)
 
 
-def test_memo_artifact_partition_by_layout(spark, tmp_path, monkeypatch):
-    """_memo_artifact's partition_by extension must produce a real
+def test_memo_artifact_partition_by_layout(spark, sf_dir, tmp_path, monkeypatch):
+    """The dpp entry's year-partitioned orders fixture must be a real
     hive-partitioned layout whose partition column round-trips."""
     import os
 
     from pyspark.sql import functions as F
 
-    import big_data_processing_spark.plans.catalog_ext as ce
+    from big_data_processing_spark.plans import artifacts
+    from big_data_processing_spark.plans.catalog import _t
+    from big_data_processing_spark.plans.catalog_scale import _orders_partitioned
 
-    monkeypatch.setattr(ce, "_ARTIFACT_DIR", str(tmp_path))
-    monkeypatch.setattr(ce, "_ARTIFACTS", {})
+    monkeypatch.setattr(artifacts, "_ROOT", str(tmp_path))
+    monkeypatch.setattr(artifacts, "_ARTIFACTS", {})
 
-    def build():
-        return spark.range(100).select(
-            F.col("id"), (F.col("id") % 3).cast("int").alias("p")
-        )
-
-    df = ce._memo_artifact(spark, "sfX", "part_probe", build, partition_by="p")
-    path = ce._ARTIFACTS[(os.path.abspath("sfX"), "part_probe")]
+    df = _orders_partitioned(spark, sf_dir)
+    path = artifacts._ARTIFACTS[(os.path.abspath(sf_dir), "orders_partitioned")]
+    orders = _t(spark, sf_dir, "orders")
+    years = {
+        r[0] for r in orders.select(F.year("o_orderdate")).distinct().collect()
+    }
     assert sorted(
-        d for d in os.listdir(path) if d.startswith("p=")
-    ) == ["p=0", "p=1", "p=2"]
-    assert df.count() == 100 and set(df.columns) == {"id", "p"}
+        d for d in os.listdir(path) if d.startswith("o_year=")
+    ) == sorted(f"o_year={y}" for y in years)
+    assert df.count() == orders.count()
+    assert set(df.columns) == set(orders.columns) | {"o_year"}
 
 
 def test_bloom_metadata_sized_no_false_negatives(spark):

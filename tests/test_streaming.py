@@ -75,13 +75,10 @@ def test_sink_replay_is_idempotent(spark, dirs):
     """foreachBatch is at-least-once: a crash between the parquet write
     and the checkpoint commit REPLAYS the batch. The per-batch dynamic
     partition overwrite must absorb the replay without duplicating."""
-    from big_data_processing_spark.streaming.ingest import (
-        _typed_weather,
-        make_ingest_sink,
-    )
+    from big_data_processing_spark.streaming.ingest import make_ingest_sink
 
     info = generate(str(dirs["srcdata"]), years=(2013, 2013))
-    batch = _typed_weather(
+    batch = W.clean_weather(
         spark.read.option("header", "true")
         .schema(W.WEATHER_SCHEMA)
         .csv(info["weather_csv"])
@@ -101,13 +98,10 @@ def test_sink_write_failure_propagates_after_the_other_write(spark, dirs):
     """The sink's two writes run at once: when the derived-partial write
     fails, the fact append still completes, the error reaches the
     stream, and the persisted batch is released."""
-    from big_data_processing_spark.streaming.ingest import (
-        _typed_weather,
-        make_ingest_sink,
-    )
+    from big_data_processing_spark.streaming.ingest import make_ingest_sink
 
     info = generate(str(dirs["srcdata"]), years=(2013, 2013))
-    batch = _typed_weather(
+    batch = W.clean_weather(
         spark.read.option("header", "true")
         .schema(W.WEATHER_SCHEMA)
         .csv(info["weather_csv"])
