@@ -75,7 +75,7 @@ def create_fixture(spark: SparkSession, sf_dir: str) -> str:
     2 files, not more (r12, judge r11 item 2a): multi-file stats
     pruning stays exercised (two disjoint ck ranges), while every
     mutating entry's per-run rewrite — sized to the files it hits by
-    txnlog._sized_for_rewrite — now writes ≤2 files per commit.  The
+    txnlog._write_rewrite — now writes ≤2 files per commit.  The
     r11 driver ran the txnlog family 2-4.5x slower than the builder's
     same-code sidecar purely on small-file churn over its storage."""
     from ..sources.txnlog import txn_create

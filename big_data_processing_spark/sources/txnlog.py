@@ -21,28 +21,35 @@ Protocol (the Delta/Iceberg core, minimally):
   rename-without-overwrite). A concurrent writer racing to the same
   version loses the rename and gets :class:`TxnConflict` — optimistic
   concurrency, no locks.
-- Manifests carry per-file min/max stats of the merge key, so MERGE
-  prunes untouched files from metadata alone (data skipping); only
-  files that may contain matched keys are read, anti-joined, and
-  rewritten. A 100 TB table with updates clustered in 3 files rewrites
-  3 files.
+- Manifests record the table's stat column (``stat_col``) and carry
+  per-file min/max stats of it, so MERGE and DELETE prune untouched
+  files from metadata alone (data skipping); only files that may
+  contain matched keys are read, anti-joined, and rewritten. A 100 TB
+  table with updates clustered in 3 files rewrites 3 files.
 
 Everything data-sized is a DataFrame op; driver-side state is manifest
 JSON (file names + scalar stats — KB-scale, like any table format's
-metadata layer).
+metadata layer).  The metadata side has one owner per step:
+:func:`_snapshot` resolves a version, :func:`_plan_rewrite` plans every
+MERGE/DELETE rewrite, :func:`_next_manifest` builds every next-version
+manifest, and :func:`_manifests` walks the surviving log.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
 import uuid
+from collections.abc import Iterable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _LOG_DIR = "_txnlog"
 _DATA_DIR = "data"
+
+_log = logging.getLogger(__name__)
 
 
 class TxnConflict(RuntimeError):
@@ -124,6 +131,78 @@ def latest_version(table: str) -> int:
 def _read_manifest(table: str, version: int) -> dict:
     with open(_log_path(table, version)) as f:
         return json.load(f)
+
+
+def _snapshot(table: str, version: int | None = None) -> dict:
+    """Manifest of ``version``, latest by default."""
+    v = latest_version(table) if version is None else version
+    if v < 0:
+        raise FileNotFoundError(f"no txnlog table at {table}")
+    return _read_manifest(table, v)
+
+
+def _manifests(table: str, versions: Iterable[int]) -> Iterator[tuple[int, dict]]:
+    """``(v, manifest)`` for each of ``versions`` whose manifest still
+    exists (vacuum retires old ones), lazily in the given order."""
+    for v in versions:
+        if os.path.exists(_log_path(table, v)):
+            yield v, _read_manifest(table, v)
+
+
+def _intact_snapshot(table: str, version: int, verb: str) -> dict:
+    """Manifest of ``version`` for RESTORE/CLONE, which must still have
+    it AND every file it lists.  Log retention and file retention are
+    separate axes: a manifest can outlive its files (vacuum keeps
+    manifests when its rollup failed), and committing such a snapshot
+    would fail at scan time — so probe up front, as Delta's RESTORE
+    does.  O(files of one version) driver existence probes, only on
+    these explicit operators."""
+    if not os.path.exists(_log_path(table, version)):
+        raise FileNotFoundError(
+            f"version {version} was vacuumed beyond retention"
+        )
+    m = _read_manifest(table, version)
+    missing = [
+        e["path"]
+        for e in m["files"]
+        if not os.path.exists(os.path.join(table, e["path"]))
+    ]
+    if missing:
+        raise FileNotFoundError(
+            f"version {version} lost {len(missing)} data file(s) to vacuum "
+            f"retention (e.g. {missing[0]}); cannot {verb}"
+        )
+    return m
+
+
+def _next_manifest(
+    op: str,
+    read_v: int,
+    base: dict,
+    carry: list[dict],
+    new_files: Sequence[dict] = (),
+    **extras,
+) -> dict:
+    """The manifest of version ``read_v + 1``: ``carry`` (entries kept
+    as they are) plus ``new_files`` (the files this commit wrote,
+    recorded under ``added`` so a WAP abort can drop them in O(1)
+    manifest reads).  ``base`` is the snapshot whose schema, stat
+    column and partition spec the new version keeps; ``extras`` are
+    the op's own fields (``rewrote``, ``compacted``,
+    ``restored_version``, the prune counts, ...)."""
+    manifest = {
+        "version": read_v + 1,
+        "op": op,
+        "read_version": read_v,
+        "files": list(carry) + list(new_files),
+        "schema": base["schema"],
+        "stat_col": base["stat_col"],
+        "added": sorted(e["path"] for e in new_files),
+        **extras,
+    }
+    if base.get("partition_by"):
+        manifest["partition_by"] = base["partition_by"]
+    return manifest
 
 
 # ---------------------------------------------------------------------------
@@ -241,7 +320,8 @@ def _write_checkpoint(table: str, version: int) -> None:
     file, a corrupt previous rollup) may surface as a commit error.
     A raise would make the committed MERGE look failed and a retrying
     writer without a txn_id would re-apply the batch as a duplicate
-    version (code-review r6 finding)."""
+    version (code-review r6 finding).  A failure is logged as one
+    WARNING naming the table and version instead."""
     try:
         prev = _latest_checkpoint(table)
         prev_v = prev["version"] if prev is not None else -1
@@ -261,11 +341,8 @@ def _write_checkpoint(table: str, version: int) -> None:
         start = prev["version"] + 1 if prev is not None else 0
         txn_ids: dict[str, int] = dict(prev["txn_ids"]) if prev else {}
         history: list[list] = list(prev["history"]) if prev else []
-        for v in range(start, version + 1):
-            p = _log_path(table, v)
-            if not os.path.exists(p):
-                continue  # vacuumed before ever checkpointed — gone, as before
-            m = _read_manifest(table, v)
+        # a version vacuumed before ever checkpointed is gone, as before
+        for v, m in _manifests(table, range(start, version + 1)):
             if m.get("txn_id") is not None:
                 txn_ids[m["txn_id"]] = v
             history.append(_history_row(m))
@@ -297,8 +374,11 @@ def _write_checkpoint(table: str, version: int) -> None:
                 os.unlink(_checkpoint_path(table, old_v))
             except FileNotFoundError:
                 pass  # another writer's cleanup won the race
-    except Exception:
-        return  # slower walks until the next interval retries the rollup
+    except Exception as e:
+        # slower walks until the next interval retries the rollup
+        _log.warning(
+            "txnlog checkpoint of %s at version %d failed: %r", table, version, e
+        )
 
 
 def _manifest_schema(m: dict):
@@ -313,7 +393,10 @@ def _manifest_schema(m: dict):
 
 
 def _read_files(spark: SparkSession, table: str, m: dict, entries: list[dict]) -> DataFrame:
-    """Schema-pinned read of a subset of a manifest's data files."""
+    """Schema-pinned read of a subset of a manifest's data files (an
+    empty subset reads as the empty frame of that schema)."""
+    if not entries:
+        return spark.createDataFrame([], _manifest_schema(m))
     return spark.read.schema(_manifest_schema(m)).parquet(
         *[os.path.join(table, e["path"]) for e in entries]
     )
@@ -353,18 +436,20 @@ def _commit(table: str, version: int, manifest: dict) -> None:
 _TARGET_FILE_ROWS = 4_000_000
 
 
-def _sized_for_rewrite(
-    new_rows: DataFrame,
+def _write_rewrite(
+    spark: SparkSession,
+    table: str,
+    m: dict,
+    rows: DataFrame,
     n_rewrite: int,
-    stat_col: str,
-    partition_by: list[str],
-) -> DataFrame:
-    """Size a MERGE/DELETE rewrite's output partitioning to its unit of
-    work: a commit that rewrote ``k`` files writes ~``max(1, k)`` files,
-    range-clustered on the stat column so the new files' [lo, hi]
-    stats keep pruning sharp (hash-clustered on the partition columns
-    instead when the table is partitioned — the hive-style router then
-    emits one file per partition value per bucket).
+) -> list[dict]:
+    """Write a MERGE/DELETE rewrite's rows as new files, output
+    partitioning sized to its unit of work: a commit that rewrote ``k``
+    files writes ~``max(1, k)`` files, range-clustered on the stat
+    column so the new files' [lo, hi] stats keep pruning sharp
+    (hash-clustered on the partition columns instead when the table is
+    partitioned — the hive-style router then emits one file per
+    partition value per bucket).
 
     Without this, the output file count was the ACCIDENTAL partition
     count of the plan — a union of an anti-join's shuffle partitions
@@ -375,10 +460,16 @@ def _sized_for_rewrite(
     uncontrolled in both directions.  The ``maxRecordsPerFile`` option
     in :func:`_write_data_files` guards the other side: a fat rewrite
     still splits at the row budget regardless of ``n_rewrite``."""
+    stat_col = m["stat_col"]
+    partition_by = m.get("partition_by") or []
     n_out = max(1, n_rewrite)
     if partition_by:
-        return new_rows.repartition(n_out, *[F.col(c) for c in partition_by])
-    return new_rows.repartitionByRange(n_out, stat_col)
+        rows = rows.repartition(n_out, *[F.col(c) for c in partition_by])
+    else:
+        rows = rows.repartitionByRange(n_out, stat_col)
+    return _write_data_files(
+        spark, table, rows, stat_col, partition_by=partition_by
+    )
 
 
 def _write_data_files(
@@ -415,7 +506,7 @@ def _write_data_files(
     # maxRecordsPerFile: upper-bounds rows per physical file no matter
     # what partitioning the caller handed in (the lower bound — don't
     # scatter a small commit across the accidental partition count of
-    # the plan — is the callers' _sized_for_rewrite).  At 100 TB this
+    # the plan — is _write_rewrite's sizing).  At 100 TB this
     # is the split guard that keeps one fat range/partition from
     # becoming a single monster file.
     if partition_by:
@@ -542,6 +633,7 @@ def txn_create(
         "op": "create",
         "files": files,
         "schema": df.schema.json(),
+        "stat_col": stat_col,
         "added": sorted(e["path"] for e in files),
     }
     if partition_by:
@@ -562,12 +654,7 @@ def txn_read(
     rollup failed) but whose files were reclaimed fails at scan time —
     file retention and log retention are separate axes, as in Delta
     (DESCRIBE HISTORY outlives time travel)."""
-    v = latest_version(table) if version is None else version
-    if v < 0:
-        raise FileNotFoundError(f"no txnlog table at {table}")
-    m = _read_manifest(table, v)
-    if not m["files"]:
-        return spark.createDataFrame([], _manifest_schema(m))
+    m = _snapshot(table, version)
     # _read_files pins the MANIFEST's schema, not whatever the files
     # happen to contain: after schema evolution (txn_merge schema_mode=
     # "merge") carried files physically lack the new columns and the
@@ -589,11 +676,7 @@ def txn_scan_plan(
     Z-order OPTIMIZE); files without stats for a predicate column are
     conservatively kept — pruning is an optimization, never a filter.
     Manifest-metadata only: no Spark job, no data file touched."""
-    v = latest_version(table) if version is None else version
-    if v < 0:
-        raise FileNotFoundError(f"no txnlog table at {table}")
-    m = _read_manifest(table, v)
-    return _scan_plan(m, col_ranges)
+    return _scan_plan(_snapshot(table, version), col_ranges)
 
 
 def _scan_plan(m: dict, col_ranges: dict[str, tuple]) -> tuple[list[dict], int]:
@@ -634,15 +717,9 @@ def txn_read_where(
     predicate re-applies row-exactly, so the result is identical to
     filtering a full :func:`txn_read` — just cheaper after a Z-order
     OPTIMIZE laid files out with small per-column bounding boxes."""
-    v = latest_version(table) if version is None else version
-    if v < 0:
-        raise FileNotFoundError(f"no txnlog table at {table}")
-    m = _read_manifest(table, v)
+    m = _snapshot(table, version)
     selected, _total = _scan_plan(m, col_ranges)
-    if not selected:
-        df = spark.createDataFrame([], _manifest_schema(m))
-    else:
-        df = _read_files(spark, table, m, selected)
+    df = _read_files(spark, table, m, selected)
     for col, (lo, hi) in col_ranges.items():
         df = df.filter((F.col(col) >= lo) & (F.col(col) <= hi))
     return df
@@ -703,6 +780,89 @@ def _partition_prune_candidates(
     return kept
 
 
+def _plan_rewrite(
+    spark: SparkSession,
+    table: str,
+    m: dict,
+    keys: DataFrame,
+    key_cols: list[str],
+) -> tuple[list[dict], list[dict], int, int]:
+    """File-level planning shared by MERGE and DELETE: split snapshot
+    ``m``'s files into ``rewrite`` (files holding at least one of
+    ``keys``) and ``carry`` (every other file, kept untouched), and
+    return ``(rewrite, carry, n_stat_candidates, n_candidates)``.
+
+    1. metadata prune: drop files whose [lo, hi] range of the stat
+       column cannot contain any key — SOUND ONLY when the stat column
+       is itself a key column (then a key's stat value is the value the
+       matched rows hold); when it is not, an update may change a row's
+       stat value and the range says nothing about where the matched
+       KEYS live, so pruning is skipped and every file is a candidate
+       (correctness over speed — exact pruning in step 3 still bounds
+       the rewrite);
+    2. partition prune (:func:`_partition_prune_candidates`): sound
+       under the same key-subset condition — a delete never moves a
+       row, and an update cannot move one when partition_by ⊆ key_cols;
+    3. exact prune: scan only the candidates, semi-join the keys, and
+       collect the NAMES of files actually holding matches (bounded
+       driver list, standard MERGE planning).
+
+    The two counts are the candidates after steps 1 and 2.  Comparing
+    them isolates partition pruning from stat pruning: equal means the
+    partition prune dropped nothing (e.g. the conservative keep on
+    pre-evolution files); ``n_candidates`` strictly smaller proves
+    partition pruning was live for this plan.  Comparing
+    ``n_candidates`` to the snapshot's file count instead would conflate
+    the two prunes and misread a legitimate stat-range drop as a
+    partition prune (r11 review).
+
+    One evaluation of the arbitrary keys pipeline feeds ALL of
+    planning: the persisted distinct key set drives the stat-range
+    probe, the partition-tuple prune and the exact semi-join — before
+    r10 review each step re-ran the full pipeline as its own driver
+    action."""
+    stat_col = m["stat_col"]
+    distinct_keys = keys.select(*key_cols).distinct().persist()
+    try:
+        if stat_col in key_cols:
+            krange = distinct_keys.agg(
+                F.min(stat_col).alias("lo"), F.max(stat_col).alias("hi")
+            ).collect()[0]
+            candidates = [
+                e
+                for e in m["files"]
+                if krange["lo"] is not None
+                and not (e["hi"] < krange["lo"] or e["lo"] > krange["hi"])
+            ]
+        else:
+            candidates = list(m["files"])
+        n_stat_candidates = len(candidates)
+        candidates = _partition_prune_candidates(
+            candidates, distinct_keys, key_cols, m.get("partition_by") or []
+        )
+        untouched = [e for e in m["files"] if e not in candidates]
+
+        hit_files: set[str] = set()
+        if candidates:
+            cand_df = _read_files(spark, table, m, candidates)
+            hits = (
+                cand_df.select(*key_cols, F.input_file_name().alias("__f"))
+                .join(_hinted_keys(distinct_keys), key_cols)
+                .select("__f")
+                .distinct()
+                .collect()
+            )
+            hit_files = {
+                os.path.relpath(r["__f"].replace("file:", ""), table)
+                for r in hits
+            }
+    finally:
+        distinct_keys.unpersist()
+    rewrite = [e for e in candidates if e["path"] in hit_files]
+    carry = untouched + [e for e in candidates if e["path"] not in hit_files]
+    return rewrite, carry, n_stat_candidates, len(candidates)
+
+
 def _plan_merge(
     spark: SparkSession,
     table: str,
@@ -726,78 +886,17 @@ def _plan_merge(
     manifest-schema read in :func:`txn_read`.  A same-name column with
     a different type is always an error (no implicit casts).
 
-    File-level planning (the scale path):
-
-    1. metadata prune: drop files whose [lo, hi] range of the stat
-       column cannot contain any update key — SOUND ONLY when the stat
-       column is itself a merge key (then an update's stat value is the
-       value the matched rows hold); when it is not, an update may
-       change a row's stat value and the range says nothing about where
-       the matched KEYS live, so pruning is skipped and every file is a
-       candidate (correctness over speed — exact pruning in step 2
-       still bounds the rewrite);
-    2. exact prune: scan only range-candidates, semi-join the update
-       keys, and collect the NAMES of files actually holding matches
-       (bounded driver list, standard MERGE planning);
-    3. rewrite: anti-join just those files and write kept ∪ updates as
-       new files; every other live file is carried into the new
-       manifest untouched.
-    """
-    read_v = latest_version(table)
-    if read_v < 0:
-        raise FileNotFoundError(f"no txnlog table at {table}")
-    m = _read_manifest(table, read_v)
-    stat_col = m["files"][0]["stat_col"] if m["files"] else key_cols[0]
-    partition_by = m.get("partition_by") or []
-
-    # One evaluation of the arbitrary updates pipeline feeds ALL of
-    # planning: the persisted distinct key set drives the stat-range
-    # probe (stat_col ∈ key_cols whenever that prune is sound), the
-    # partition-tuple prune (partition_by ⊆ key_cols ditto), and the
-    # exact semi-join — before r10 review each step re-ran the full
-    # pipeline as its own driver action.
-    upd_keys = updates.select(*key_cols).distinct().persist()
-    try:
-        if stat_col in key_cols:
-            krange = upd_keys.agg(
-                F.min(stat_col).alias("lo"), F.max(stat_col).alias("hi")
-            ).collect()[0]
-            candidates = [
-                e
-                for e in m["files"]
-                if krange["lo"] is not None
-                and not (e["hi"] < krange["lo"] or e["lo"] > krange["hi"])
-            ]
-        else:
-            candidates = list(m["files"])
-        n_stat_candidates = len(candidates)
-        candidates = _partition_prune_candidates(
-            candidates, upd_keys, key_cols, partition_by
-        )
-        untouched = [e for e in m["files"] if e not in candidates]
-
-        hit_files: set[str] = set()
-        if candidates:
-            cand_df = _read_files(spark, table, m, candidates)
-            hits = (
-                cand_df.select(*key_cols, F.input_file_name().alias("__f"))
-                .join(_hinted_keys(upd_keys), key_cols)
-                .select("__f")
-                .distinct()
-                .collect()
-            )
-            hit_files = {
-                os.path.relpath(r["__f"].replace("file:", ""), table)
-                for r in hits
-            }
-    finally:
-        upd_keys.unpersist()
-    rewrite = [e for e in candidates if e["path"] in hit_files]
-    carry = untouched + [e for e in candidates if e["path"] not in hit_files]
+    File-level planning is :func:`_plan_rewrite`; the files holding
+    matches are anti-joined against the update keys and written back
+    with the updates as new files."""
+    m = _snapshot(table)
+    rewrite, carry, n_stat_candidates, n_candidates = _plan_rewrite(
+        spark, table, m, updates, key_cols
+    )
 
     from pyspark.sql import types as T
 
-    table_schema = T.StructType.fromJson(json.loads(m["schema"]))
+    table_schema = _manifest_schema(m)
     table_cols = [f.name for f in table_schema.fields]
     if schema_mode == "merge":
         upd_types = dict(updates.dtypes)
@@ -836,42 +935,17 @@ def _plan_merge(
         new_rows = kept.select(*out_cols).unionByName(updates.select(*out_cols))
     else:
         new_rows = updates.select(*out_cols)
-    new_files = _write_data_files(
-        spark,
-        table,
-        _sized_for_rewrite(new_rows, len(rewrite), stat_col, partition_by),
-        stat_col,
-        partition_by=partition_by,
+    new_files = _write_rewrite(spark, table, m, new_rows, len(rewrite))
+    return _next_manifest(
+        "merge",
+        m["version"],
+        dict(m, schema=evolved_schema.json()),
+        carry,
+        new_files,
+        rewrote=sorted(e["path"] for e in rewrite),
+        n_stat_candidates=n_stat_candidates,
+        n_candidates=n_candidates,
     )
-
-    manifest = {
-        "version": read_v + 1,
-        "op": "merge",
-        "read_version": read_v,
-        "files": carry + new_files,
-        "schema": evolved_schema.json(),
-        "rewrote": sorted(e["path"] for e in rewrite),
-        # paths THIS plan introduced (vs carried): lets txn_abort drop a
-        # staged merge in O(1) manifest reads instead of walking every
-        # committed version to prove a file isn't shared
-        "added": sorted(e["path"] for e in new_files),
-        # observability: candidate counts after EACH planning prune —
-        # n_stat_candidates after the stat-range probe, n_candidates
-        # after the partition prune on top of it (= what the exact
-        # semi-join scanned).  Comparing the two isolates partition
-        # pruning from stat pruning: equal means the partition prune
-        # dropped nothing (e.g. the conservative keep on pre-evolution
-        # files); n_candidates strictly smaller proves partition
-        # pruning was live for this plan.  Comparing n_candidates to
-        # the snapshot's file count instead would conflate the two
-        # prunes and misread a legitimate stat-range drop as a
-        # partition prune (r11 review).
-        "n_stat_candidates": n_stat_candidates,
-        "n_candidates": len(candidates),
-    }
-    if partition_by:
-        manifest["partition_by"] = partition_by
-    return manifest
 
 
 def txn_merge(
@@ -922,11 +996,8 @@ def _applied_txn_version(table: str, txn_id: str) -> int | None:
     replay check survives vacuum retiring old manifest JSONs."""
     ckpt = _latest_checkpoint(table)
     floor = ckpt["version"] if ckpt is not None else -1
-    for v in range(latest_version(table), floor, -1):
-        p = _log_path(table, v)
-        if not os.path.exists(p):
-            continue
-        if _read_manifest(table, v).get("txn_id") == txn_id:
+    for v, m in _manifests(table, range(latest_version(table), floor, -1)):
+        if m.get("txn_id") == txn_id:
             return v
     if ckpt is not None:
         return ckpt["txn_ids"].get(txn_id)
@@ -938,6 +1009,11 @@ _STAGED_DIR = "staged"
 
 def _staged_path(table: str, token: str) -> str:
     return os.path.join(table, _LOG_DIR, _STAGED_DIR, f"{token}.json")
+
+
+def _read_staged(table: str, token: str) -> dict:
+    with open(_staged_path(table, token)) as f:
+        return json.load(f)
 
 
 def txn_stage_merge(
@@ -969,10 +1045,7 @@ def txn_stage_merge(
 def txn_read_staged(spark: SparkSession, table: str, token: str) -> DataFrame:
     """AUDIT view: the table as it WOULD look if the staged merge
     published — schema-pinned like any snapshot read."""
-    with open(_staged_path(table, token)) as f:
-        m = json.load(f)
-    if not m["files"]:
-        return spark.createDataFrame([], _manifest_schema(m))
+    m = _read_staged(table, token)
     return _read_files(spark, table, m, m["files"])
 
 
@@ -981,16 +1054,14 @@ def txn_publish(table: str, token: str) -> int:
     version.  Raises :class:`TxnConflict` if any writer committed since
     the stage was planned (its file pruning is stale) — re-stage
     against the new snapshot, exactly like an optimistic retry."""
-    path = _staged_path(table, token)
-    with open(path) as f:
-        m = json.load(f)
+    m = _read_staged(table, token)
     if latest_version(table) != m["read_version"]:
         raise TxnConflict(
             f"staged merge read version {m['read_version']} but the table "
             f"is now at {latest_version(table)}; abort and re-stage"
         )
     _commit(table, m["version"], m)
-    os.unlink(path)
+    os.unlink(_staged_path(table, token))
     return m["version"]
 
 
@@ -1003,18 +1074,14 @@ def txn_abort(table: str, token: str) -> list[str]:
     construction), so the drop is O(1) manifest reads.  A pre-``added``
     staged manifest falls back to the old proof — walk every committed
     version and delete only paths none of them reference."""
-    path = _staged_path(table, token)
-    with open(path) as f:
-        m = json.load(f)
+    m = _read_staged(table, token)
     added = m.get("added")
     if added is None:  # legacy staged manifest without provenance
-        committed: set[str] = set()
-        for v in range(0, latest_version(table) + 1):
-            lp = _log_path(table, v)
-            if os.path.exists(lp):
-                committed |= {
-                    e["path"] for e in _read_manifest(table, v)["files"]
-                }
+        committed = {
+            e["path"]
+            for _v, cm in _manifests(table, range(latest_version(table) + 1))
+            for e in cm["files"]
+        }
         added = [e["path"] for e in m["files"] if e["path"] not in committed]
     removed = []
     for rel in added:
@@ -1022,7 +1089,7 @@ def txn_abort(table: str, token: str) -> list[str]:
         if os.path.exists(full):
             os.unlink(full)
             removed.append(rel)
-    os.unlink(path)
+    os.unlink(_staged_path(table, token))
     return sorted(removed)
 
 
@@ -1075,22 +1142,20 @@ def txn_optimize(
     them. Returns the committed version, or None when nothing needed
     compacting. Bin planning is manifest metadata only (KB-scale);
     each bin rewrite is one bounded Spark job."""
-    read_v = latest_version(table)
-    if read_v < 0:
-        raise FileNotFoundError(f"no txnlog table at {table}")
-    m = _read_manifest(table, read_v)
+    m = _snapshot(table)
     if not m["files"]:
         return None
     small = [e for e in m["files"] if e["rows"] < target_rows]
     keep = [e for e in m["files"] if e["rows"] >= target_rows]
-    stat_col = m["files"][0]["stat_col"]
+    stat_col = m["stat_col"]
     partition_by = m.get("partition_by") or []
 
     if cluster or cluster_cols:
-        # one clustering path: sort key is the stat column (range
-        # clustering) or the Morton interleave (ZORDER); everything
-        # else — bin sizing, rewrite, manifest bookkeeping — is shared
-        # so a fix to either regime cannot miss the other
+        # one clustering path: the small files form ONE bin whose sort
+        # key is the stat column (range clustering) or the Morton
+        # interleave (ZORDER); bin rewrite and manifest bookkeeping are
+        # shared with bin-packing below, so a fix to either regime
+        # cannot miss the other
         if cluster_cols:
             # clustered-column stats live in the JSON manifest (same
             # round-trip constraint as the stat column) AND feed the
@@ -1110,104 +1175,91 @@ def txn_optimize(
                     )
         if len(small) < min_files_per_bin:
             return None
-        total = sum(e["rows"] for e in small)
-        n_out = max(1, -(-total // target_rows))
-        merged = _read_files(spark, table, m, small)
+        rewrite_bins, carry = [small], keep
+        n_out = max(1, -(-sum(e["rows"] for e in small) // target_rows))
+        extras = {"clustered": True}
         if cluster_cols:
-            from ..operators.zorder import zorder_key
+            extras["clustered_cols"] = list(cluster_cols)
 
-            sort_key = zorder_key(merged, list(cluster_cols))
-        else:
-            sort_key = F.col(stat_col)
-        ckey = f"__ckey_{uuid.uuid4().hex[:8]}"
-        clustered = (
+        def shaped(merged: DataFrame) -> DataFrame:
+            if cluster_cols:
+                from ..operators.zorder import zorder_key
+
+                sort_key = zorder_key(merged, list(cluster_cols))
+            else:
+                sort_key = F.col(stat_col)
             # collision-free temp name: a table that legitimately has a
             # "__ckey" column must not be clobbered then dropped from
             # the rewritten files (ADVICE r5)
-            merged.withColumn(ckey, sort_key)
-            .repartitionByRange(n_out, ckey)
-            .sortWithinPartitions(ckey)
-            .drop(ckey)
-        )
-        new_files = _write_data_files(
-            spark,
-            table,
-            clustered,
-            stat_col,
-            extra_cols=list(cluster_cols) if cluster_cols else None,
-            partition_by=partition_by,
-        )
-        manifest = {
-            "version": read_v + 1,
-            "op": "optimize",
-            "clustered": True,
-            "read_version": read_v,
-            "files": keep + new_files,
-            "schema": m["schema"],
-            "compacted": sorted(e["path"] for e in small),
-            "added": sorted(e["path"] for e in new_files),
-        }
-        if cluster_cols:
-            manifest["clustered_cols"] = list(cluster_cols)
-        if partition_by:
-            manifest["partition_by"] = partition_by
-        _commit(table, read_v + 1, manifest)
-        return read_v + 1
+            ckey = f"__ckey_{uuid.uuid4().hex[:8]}"
+            return (
+                merged.withColumn(ckey, sort_key)
+                .repartitionByRange(n_out, ckey)
+                .sortWithinPartitions(ckey)
+                .drop(ckey)
+            )
 
-    # Bin-pack WITHIN a partition (Delta/Iceberg OPTIMIZE semantics):
-    # the routed write would split a cross-partition bin back into one
-    # file per partition anyway — correct, but it churns files without
-    # compacting.  Files predating partition evolution (no recorded
-    # values) pack together under the no-partition group.
-    def _ptuple(e: dict):
-        part = e.get("partition") or {}
-        return tuple(part.get(c) for c in partition_by)
+    else:
+        # Bin-pack WITHIN a partition (Delta/Iceberg OPTIMIZE
+        # semantics): the routed write would split a cross-partition
+        # bin back into one file per partition anyway — correct, but it
+        # churns files without compacting.  Files predating partition
+        # evolution (no recorded values) pack together under the
+        # no-partition group.
+        def _ptuple(e: dict):
+            part = e.get("partition") or {}
+            return tuple(part.get(c) for c in partition_by)
 
-    groups: dict[tuple, list[dict]] = {}
-    for e in small:
-        groups.setdefault(_ptuple(e), []).append(e)
+        groups: dict[tuple, list[dict]] = {}
+        for e in small:
+            groups.setdefault(_ptuple(e), []).append(e)
 
-    bins: list[list[dict]] = []
-    for group in groups.values():
-        gbins: list[list[dict]] = []
-        fill: list[int] = []
-        for e in sorted(group, key=lambda e: -e["rows"]):
-            for i, used in enumerate(fill):
-                if used + e["rows"] <= target_rows:
-                    gbins[i].append(e)
-                    fill[i] += e["rows"]
-                    break
-            else:
-                gbins.append([e])
-                fill.append(e["rows"])
-        bins.extend(gbins)
-    rewrite_bins = [b for b in bins if len(b) >= min_files_per_bin]
-    if not rewrite_bins:
-        return None
-    carry = keep + [e for b in bins if len(b) < min_files_per_bin for e in b]
+        bins: list[list[dict]] = []
+        for group in groups.values():
+            gbins: list[list[dict]] = []
+            fill: list[int] = []
+            for e in sorted(group, key=lambda e: -e["rows"]):
+                for i, used in enumerate(fill):
+                    if used + e["rows"] <= target_rows:
+                        gbins[i].append(e)
+                        fill[i] += e["rows"]
+                        break
+                else:
+                    gbins.append([e])
+                    fill.append(e["rows"])
+            bins.extend(gbins)
+        rewrite_bins = [b for b in bins if len(b) >= min_files_per_bin]
+        if not rewrite_bins:
+            return None
+        carry = keep + [e for b in bins if len(b) < min_files_per_bin for e in b]
+        extras = {}
+
+        def shaped(merged: DataFrame) -> DataFrame:
+            return merged.coalesce(1)
 
     new_files: list[dict] = []
     for b in rewrite_bins:
-        merged = _read_files(spark, table, m, b).coalesce(1)
         new_files.extend(
             _write_data_files(
-                spark, table, merged, stat_col, partition_by=partition_by
+                spark,
+                table,
+                shaped(_read_files(spark, table, m, b)),
+                stat_col,
+                extra_cols=cluster_cols,
+                partition_by=partition_by,
             )
         )
-
-    manifest = {
-        "version": read_v + 1,
-        "op": "optimize",
-        "read_version": read_v,
-        "files": carry + new_files,
-        "schema": m["schema"],
-        "compacted": sorted(e["path"] for b in rewrite_bins for e in b),
-        "added": sorted(e["path"] for e in new_files),
-    }
-    if partition_by:
-        manifest["partition_by"] = partition_by
-    _commit(table, read_v + 1, manifest)
-    return read_v + 1
+    manifest = _next_manifest(
+        "optimize",
+        m["version"],
+        m,
+        carry,
+        new_files,
+        compacted=sorted(e["path"] for b in rewrite_bins for e in b),
+        **extras,
+    )
+    _commit(table, manifest["version"], manifest)
+    return manifest["version"]
 
 
 def txn_vacuum(table: str, keep_versions: int = 2) -> list[str]:
@@ -1242,12 +1294,7 @@ def txn_vacuum(table: str, keep_versions: int = 2) -> list[str]:
     # exactly like any other already-retired version (found by the r6
     # full-algebra randomized property: vacuum(keep=2) then
     # vacuum(keep=4) crashed here)
-    live = {
-        e["path"]
-        for rv in retained
-        if os.path.exists(_log_path(table, rv))
-        for e in _read_manifest(table, rv)["files"]
-    }
+    live = {e["path"] for _rv, m in _manifests(table, retained) for e in m["files"]}
     staged_dir = os.path.join(table, _LOG_DIR, _STAGED_DIR)
     if os.path.isdir(staged_dir):
         for f in os.listdir(staged_dir):
@@ -1277,89 +1324,35 @@ def txn_delete(
     keys: DataFrame,
     key_cols: list[str],
 ) -> int:
-    """DELETE by key set, committed as one new version — the same
-    file-level planning as :func:`txn_merge` (stat-range prune when
-    the stat column is a delete key, exact file prune via a broadcast
-    semi-join, rewrite of only the files actually holding matches)
-    with the union-of-updates step removed: rewritten files keep only
-    their anti-joined survivors. Files with no matches are carried
-    untouched; a file whose every row matches simply contributes no
-    new rows."""
-    read_v = latest_version(table)
-    if read_v < 0:
-        raise FileNotFoundError(f"no txnlog table at {table}")
-    m = _read_manifest(table, read_v)
-    stat_col = m["files"][0]["stat_col"] if m["files"] else key_cols[0]
-    partition_by = m.get("partition_by") or []
-
-    # one evaluation of the keys pipeline feeds all planning steps
-    # (same shape as _plan_merge, see there)
-    del_keys = keys.select(*key_cols).distinct().persist()
-    try:
-        if stat_col in key_cols:
-            krange = del_keys.agg(
-                F.min(stat_col).alias("lo"), F.max(stat_col).alias("hi")
-            ).collect()[0]
-            candidates = [
-                e
-                for e in m["files"]
-                if krange["lo"] is not None
-                and not (e["hi"] < krange["lo"] or e["lo"] > krange["hi"])
-            ]
-        else:
-            candidates = list(m["files"])
-        # deletes never move a row between partitions, so pruning on the
-        # delete keys' partition tuples is sound under the same
-        # key-subset condition as MERGE
-        candidates = _partition_prune_candidates(
-            candidates, del_keys, key_cols, partition_by
-        )
-        untouched = [e for e in m["files"] if e not in candidates]
-
-        hit_files: set[str] = set()
-        if candidates:
-            cand_df = _read_files(spark, table, m, candidates)
-            hits = (
-                cand_df.select(*key_cols, F.input_file_name().alias("__f"))
-                .join(_hinted_keys(del_keys), key_cols)
-                .select("__f")
-                .distinct()
-                .collect()
-            )
-            hit_files = {
-                os.path.relpath(r["__f"].replace("file:", ""), table)
-                for r in hits
-            }
-    finally:
-        del_keys.unpersist()
-    rewrite = [e for e in candidates if e["path"] in hit_files]
-    carry = untouched + [e for e in candidates if e["path"] not in hit_files]
-
+    """DELETE by key set, committed as one new version — MERGE's
+    file-level planning (:func:`_plan_rewrite`: stat-range and
+    partition prunes, exact file prune via a broadcast semi-join, and
+    the same ``n_stat_candidates``/``n_candidates`` certificate in the
+    manifest) with the union-of-updates step removed: rewritten files
+    keep only their anti-joined survivors. Files with no matches are
+    carried untouched; a file whose every row matches simply
+    contributes no new rows."""
+    m = _snapshot(table)
+    rewrite, carry, n_stat_candidates, n_candidates = _plan_rewrite(
+        spark, table, m, keys, key_cols
+    )
     new_files: list[dict] = []
     if rewrite:
         old = _read_files(spark, table, m, rewrite)
         kept = old.join(keys.select(*key_cols), key_cols, "left_anti")
-        new_files = _write_data_files(
-            spark,
-            table,
-            _sized_for_rewrite(kept, len(rewrite), stat_col, partition_by),
-            stat_col,
-            partition_by=partition_by,
-        )
-
-    manifest = {
-        "version": read_v + 1,
-        "op": "delete",
-        "read_version": read_v,
-        "files": carry + new_files,
-        "schema": m["schema"],
-        "rewrote": sorted(e["path"] for e in rewrite),
-        "added": sorted(e["path"] for e in new_files),
-    }
-    if partition_by:
-        manifest["partition_by"] = partition_by
-    _commit(table, read_v + 1, manifest)
-    return read_v + 1
+        new_files = _write_rewrite(spark, table, m, kept, len(rewrite))
+    manifest = _next_manifest(
+        "delete",
+        m["version"],
+        m,
+        carry,
+        new_files,
+        rewrote=sorted(e["path"] for e in rewrite),
+        n_stat_candidates=n_stat_candidates,
+        n_candidates=n_candidates,
+    )
+    _commit(table, manifest["version"], manifest)
+    return manifest["version"]
 
 
 def txn_changes(
@@ -1391,22 +1384,16 @@ def txn_changes(
     MERGE discipline's key uniqueness per snapshot."""
     from pyspark.sql import types as T
 
-    to_v = latest_version(table) if to_version is None else to_version
     m_from = _read_manifest(table, from_version)
-    m_to = _read_manifest(table, to_v)
+    m_to = _snapshot(table, to_version)
+    to_v = m_to["version"]
     from_paths = {e["path"] for e in m_from["files"]}
     to_paths = {e["path"] for e in m_to["files"]}
     removed = sorted(from_paths - to_paths)
     added = sorted(to_paths - from_paths)
-    to_names = {
-        f["name"] for f in json.loads(m_to["schema"])["fields"]
-    }
+    to_names = set(_manifest_schema(m_to).fieldNames())
     schema = T.StructType(
-        [
-            f
-            for f in T.StructType.fromJson(json.loads(m_from["schema"])).fields
-            if f.name in to_names
-        ]
+        [f for f in _manifest_schema(m_from).fields if f.name in to_names]
     )
     missing_keys = [k for k in key_cols if k not in {f.name for f in schema.fields}]
     if missing_keys:
@@ -1415,17 +1402,14 @@ def txn_changes(
             f"schemas of the change feed ({from_version} -> {to_v})"
         )
 
+    cols = [f.name for f in schema.fields]
+
     def _side(paths: list[str], m_side: dict) -> DataFrame:
         # pinned to the OWNING version's schema, then projected onto
         # the common columns (see docstring).
-        if not paths:
-            return spark.createDataFrame([], schema)
-        df = spark.read.schema(_manifest_schema(m_side)).parquet(
-            *[os.path.join(table, p) for p in paths]
-        )
-        return df.select(*[f.name for f in schema.fields])
+        entries = [{"path": p} for p in paths]
+        return _read_files(spark, table, m_side, entries).select(*cols)
 
-    cols = [f.name for f in schema.fields]
     val_cols = [c for c in cols if c not in key_cols]
     o = _side(removed, m_from).alias("o")
     n = _side(added, m_to).alias("n")
@@ -1473,11 +1457,11 @@ def txn_history(spark: SparkSession, table: str) -> DataFrame:
     ckpt = _latest_checkpoint(table)
     rows = [tuple(r) for r in ckpt["history"]] if ckpt is not None else []
     start = ckpt["version"] + 1 if ckpt is not None else 0
-    for v in range(start, latest_version(table) + 1):
-        if not os.path.exists(_log_path(table, v)):
-            continue  # vacuumed beyond retention, never checkpointed
-        m = _read_manifest(table, v)
-        rows.append(tuple(_history_row(m)))
+    # a version vacuumed beyond retention and never checkpointed is gone
+    rows += [
+        tuple(_history_row(m))
+        for _v, m in _manifests(table, range(start, latest_version(table) + 1))
+    ]
     return spark.createDataFrame(
         rows,
         "version int, op string, read_version int, n_files int, "
@@ -1490,10 +1474,8 @@ def txn_file_stats(spark: SparkSession, table: str, version: int | None = None) 
     snapshot with their row counts and min/max pruning stats — the
     observability view behind OPTIMIZE decisions (small-file counts)
     and data-skipping effectiveness (range overlap)."""
-    v = latest_version(table) if version is None else version
-    if v < 0:
-        raise FileNotFoundError(f"no txnlog table at {table}")
-    m = _read_manifest(table, v)
+    m = _snapshot(table, version)
+    v = m["version"]
     rows = [
         (v, e["path"], e["rows"], e["stat_col"], str(e["lo"]), str(e["hi"]))
         for e in m["files"]
@@ -1516,41 +1498,13 @@ def txn_restore(table: str, to_version: int) -> int:
     v = latest_version(table)
     if to_version < 0 or to_version > v:
         raise ValueError(f"cannot restore {table} to version {to_version}")
-    if not os.path.exists(_log_path(table, to_version)):
-        raise FileNotFoundError(
-            f"version {to_version} was vacuumed beyond retention"
-        )
-    m = _read_manifest(table, to_version)
-    # log retention and file retention are separate axes: a manifest
-    # can outlive its files (vacuum keeps manifests when its rollup
-    # failed).  Restoring such a version would commit a snapshot whose
-    # reads fail at scan time — check the files up front, as Delta's
-    # RESTORE does.  O(files of one version) driver existence probes,
-    # only on this explicit operator.
-    missing = [
-        e["path"]
-        for e in m["files"]
-        if not os.path.exists(os.path.join(table, e["path"]))
-    ]
-    if missing:
-        raise FileNotFoundError(
-            f"version {to_version} lost {len(missing)} data file(s) to "
-            f"vacuum retention (e.g. {missing[0]}); cannot restore"
-        )
-    manifest = {
-        "version": v + 1,
-        "op": "restore",
-        "read_version": v,
-        "restored_version": to_version,
-        "files": m["files"],
-        "schema": m["schema"],
-        "added": [],
-    }
-    # RESTORE rolls the partition spec back WITH the snapshot (like the
-    # schema): writes after a restore route the way writes at the
-    # restored version did
-    if m.get("partition_by"):
-        manifest["partition_by"] = m["partition_by"]
+    m = _intact_snapshot(table, to_version, "restore")
+    # the restored snapshot is the base: RESTORE rolls the partition
+    # spec back WITH the schema, so writes after a restore route the
+    # way writes at the restored version did
+    manifest = _next_manifest(
+        "restore", v, m, m["files"], restored_version=to_version
+    )
     _commit(table, v + 1, manifest)
     return v + 1
 
@@ -1592,21 +1546,7 @@ def txn_clone(src: str, dst: str, version: int | None = None) -> int:
     v = head if version is None else version
     if v < 0 or v > head:
         raise ValueError(f"cannot clone {src} at version {v} (head {head})")
-    if not os.path.exists(_log_path(src, v)):
-        raise FileNotFoundError(
-            f"version {v} was vacuumed beyond retention"
-        )
-    m = _read_manifest(src, v)
-    missing = [
-        e["path"]
-        for e in m["files"]
-        if not os.path.exists(os.path.join(src, e["path"]))
-    ]
-    if missing:
-        raise FileNotFoundError(
-            f"version {v} lost {len(missing)} data file(s) to vacuum "
-            f"retention (e.g. {missing[0]}); cannot clone"
-        )
+    m = _intact_snapshot(src, v, "clone")
     for e in m["files"]:
         s = os.path.join(src, e["path"])
         d = os.path.join(dst, e["path"])
@@ -1627,6 +1567,7 @@ def txn_clone(src: str, dst: str, version: int | None = None) -> int:
         "cloned_version": v,
         "files": m["files"],
         "schema": m["schema"],
+        "stat_col": m["stat_col"],
         "added": sorted(e["path"] for e in m["files"]),
     }
     # per-file partition values ride along inside m["files"]; the
@@ -1649,28 +1590,18 @@ def txn_set_partitioning(
     ``partition_by=None`` (or ``[]``) drops partitioning for future
     writes.  Committed through the same put-if-absent protocol, so it
     conflicts atomically with concurrent writers."""
-    v = latest_version(table)
-    if v < 0:
-        raise FileNotFoundError(f"no txnlog table at {table}")
-    m = _read_manifest(table, v)
+    m = _snapshot(table)
     partition_by = list(partition_by or [])
     if partition_by:
-        from pyspark.sql import types as T
-
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
         _validate_partition_cols(
             partition_by,
-            {f.name: f.dataType.simpleString() for f in schema.fields},
+            {f.name: f.dataType.simpleString() for f in _manifest_schema(m).fields},
         )
-    manifest = {
-        "version": v + 1,
-        "op": "set_partitioning",
-        "read_version": v,
-        "files": m["files"],
-        "schema": m["schema"],
-        "added": [],
-    }
-    if partition_by:
-        manifest["partition_by"] = partition_by
-    _commit(table, v + 1, manifest)
-    return v + 1
+    manifest = _next_manifest(
+        "set_partitioning",
+        m["version"],
+        dict(m, partition_by=partition_by),
+        m["files"],
+    )
+    _commit(table, manifest["version"], manifest)
+    return manifest["version"]

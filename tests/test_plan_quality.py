@@ -176,14 +176,54 @@ _CAP_CONSUMERS = {
 }
 
 
-def test_catalog_plan_invariants_single_sweep(spark, sf_dir):
+def _guard_raw_testdata_reads(monkeypatch, sf_dir: str) -> list[str]:
+    """Wrap ``DataFrameReader.parquet`` so that every read of a path
+    under ``sf_dir`` made from outside ``readers.load_table`` (no
+    load_table frame among its callers) is recorded in the returned
+    list.  The runtime half of test_load_table_invariant's text scan,
+    which cannot see a path bound to a local first."""
+    import inspect
+    import os
+    import sys
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from big_data_processing_spark.sources.readers import load_table
+
+    root = os.path.realpath(sf_dir)
+    sanctioned = inspect.unwrap(load_table).__code__
+    real = DataFrameReader.parquet
+    offenders: list[str] = []
+
+    def guarded(self, *paths, **options):
+        for p in paths:
+            full = os.path.realpath(str(p).removeprefix("file:"))
+            if full != root and not full.startswith(root + os.sep):
+                continue
+            frame = sys._getframe(1)
+            while frame is not None and frame.f_code is not sanctioned:
+                frame = frame.f_back
+            if frame is None:
+                caller = sys._getframe(1)
+                offenders.append(
+                    f"{caller.f_code.co_filename}:{caller.f_lineno} reads {p}"
+                )
+        return real(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", guarded)
+    return offenders
+
+
+def test_catalog_plan_invariants_single_sweep(spark, sf_dir, monkeypatch):
     """One plan pass over EVERY catalog query enforcing the 100 TB
     invariants: no cartesian product, no nested-loop join outside the
     bounded-side allowlist, and no unpartitioned Window outside the
     bounded-input allowlist (a partitionless window serializes its
     whole input through one reducer).  The same pass pins the exact
     set of skew-cap consumers so the next cap rework can enumerate the
-    plans it changes mechanically instead of by grep."""
+    plans it changes mechanically instead of by grep, and fails on any
+    raw parquet read of testdata that bypasses ``load_table``."""
+    raw_reads = _guard_raw_testdata_reads(monkeypatch, sf_dir)
     cap_consumers = set()
     for name in CATALOG:
         df = CATALOG[name].fn(spark, sf_dir)
@@ -204,6 +244,10 @@ def test_catalog_plan_invariants_single_sweep(spark, sf_dir):
     assert cap_consumers == _CAP_CONSUMERS, (
         "skew-cap consumer set drifted — update _CAP_CONSUMERS AND put "
         f"every changed entry in _PRIORITY: {sorted(cap_consumers)}"
+    )
+    assert not raw_reads, (
+        "raw spark.read.parquet over testdata bypasses load_table's "
+        "timestamp normalization: " + "; ".join(raw_reads)
     )
 
 

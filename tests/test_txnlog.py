@@ -407,7 +407,7 @@ def test_optimize_cluster_restores_pruning(spark, tmp_path):
         txn_merge(spark, t, ins, key_cols=["k"])
     before_rows = _rows(txn_read(spark, t))
 
-    # target 101, not 100: _sized_for_rewrite makes each insert-merge
+    # target 101, not 100: _write_rewrite makes each insert-merge
     # land as ONE 100-row file, and a file at exactly target_rows is
     # correctly "big enough to keep" — the fixture's full-range-
     # spanning files must count as small for the cluster pass to
@@ -1498,3 +1498,62 @@ def test_evolution_entry_optimize_certificate_fires_without_pruning(
     )
     with _pytest.raises(RuntimeError, match="pruning not restored"):
         CATALOG["txnlog_partition_evolution"].fn(spark, sf_dir).collect()
+
+
+def test_emptied_partitioned_table_keeps_stat_col(spark, tmp_path):
+    """The table's stat column lives in the manifest, not in its first
+    file: a partitioned DELETE of every row commits ``files: []`` (the
+    routed empty write emits no file), and a later MERGE keyed
+    ``["dt", "k"]`` must still take its stats on ``k`` — taking them on
+    the date key ``dt`` made the commit fail with a non-JSON-native
+    min/max."""
+    import datetime
+
+    from big_data_processing_spark.sources.txnlog import (
+        _read_manifest,
+        txn_delete,
+    )
+
+    t = str(tmp_path / "t")
+    schema = "k long, yr int, dt date, v long"
+    d0 = datetime.date(2020, 1, 1)
+    rows = [(k, k % 3, d0, k * 2) for k in range(12)]
+    txn_create(
+        spark,
+        t,
+        spark.createDataFrame(rows, schema),
+        stat_col="k",
+        partition_by=["yr"],
+    )
+    v = txn_delete(spark, t, spark.range(12).withColumnRenamed("id", "k"), ["k"])
+    assert _read_manifest(t, v)["files"] == []
+
+    upd = spark.createDataFrame([(5, 2, d0, 50), (7, 1, d0, 70)], schema)
+    v = txn_merge(spark, t, upd, key_cols=["dt", "k"])
+    m = _read_manifest(t, v)
+    assert m["stat_col"] == "k"
+    assert m["files"] and all(e["stat_col"] == "k" for e in m["files"])
+    assert {(r.k, r.v) for r in txn_read(spark, t).collect()} == {(5, 50), (7, 70)}
+
+
+def test_delete_records_partition_pruning_certificate(spark, tmp_path):
+    """DELETE plans through MERGE's planner, so its manifest carries the
+    same two prune counts: with partition_by ⊆ key_cols, deleting keys
+    of ONE partition whose ``k`` range spans the table leaves the stat
+    prune with (nearly) every file and the partition prune with only
+    that partition's files."""
+    from big_data_processing_spark.sources.txnlog import (
+        _read_manifest,
+        txn_delete,
+    )
+
+    t = _make_part_table(spark, tmp_path)
+    m0 = _read_manifest(t, 0)
+    keys = _part_df(spark).filter((F.col("yr") == 2) & (F.col("k") % 7 == 0))
+    v = txn_delete(spark, t, keys.select("k", "yr"), ["k", "yr"])
+    m = _read_manifest(t, v)
+    assert m["n_candidates"] < m["n_stat_candidates"]
+    by_path = {e["path"]: e for e in m0["files"]}
+    assert m["rewrote"]
+    assert {by_path[p]["partition"]["yr"] for p in m["rewrote"]} == {2}
+    assert txn_read(spark, t).count() == 500 - keys.count()

@@ -29,6 +29,7 @@ actual MERGE machinery.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import random
 
@@ -186,11 +187,12 @@ def test_replay_and_history_survive_vacuum(spark, tmp_path):
     assert tl._latest_checkpoint(t)["version"] == 54
 
 
-def test_checkpoint_write_failure_never_fails_commit(tmp_path, monkeypatch):
+def test_checkpoint_write_failure_never_fails_commit(tmp_path, monkeypatch, caplog):
     """The commit is durable before the rollup runs; any checkpoint
     failure must degrade to slower walks, never to a commit error (a
     raise would make a committed MERGE look failed and a retrying
-    writer would duplicate the batch) — code-review r6 finding."""
+    writer would duplicate the batch) — code-review r6 finding.  The
+    failure is not silent: one WARNING names the table and version."""
 
     def boom(table, version):
         raise OSError("ENOSPC")
@@ -199,8 +201,16 @@ def test_checkpoint_write_failure_never_fails_commit(tmp_path, monkeypatch):
     for v in range(0, 10):
         _fake_commit(t, v, txn_id=f"txn-{v}")
     monkeypatch.setattr(tl, "_read_manifest", boom)  # rollup loop reads fail
-    _fake_commit(t, 10, txn_id="txn-10")  # interval commit: must succeed
+    with caplog.at_level(logging.WARNING, logger=tl.__name__):
+        _fake_commit(t, 10, txn_id="txn-10")  # interval commit: must succeed
     monkeypatch.undo()
+    warned = [
+        r.getMessage()
+        for r in caplog.records
+        if r.name == tl.__name__ and r.levelno == logging.WARNING
+    ]
+    assert len(warned) == 1, warned
+    assert t in warned[0] and "version 10" in warned[0] and "ENOSPC" in warned[0]
     assert tl.latest_version(t) == 10
     assert tl._latest_checkpoint(t) is None  # no rollup landed
     assert tl._applied_txn_version(t, "txn-3") == 3  # full walk still works
